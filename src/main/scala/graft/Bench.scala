@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -17,14 +16,10 @@ object Bench {
     // optional focused run: SPARK_GRAFT_BENCH_FILTER=q61,q62 (exact names)
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    // the shipped session settings, not a copy of them
+    val spark = GraftSession.local(cpus.toInt)
+    // the effective configuration, in the artifact
+    val parallelism = spark.sparkContext.defaultParallelism
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => filter.forall(_.contains(q._1)))
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -56,7 +51,7 @@ object Bench {
     val failJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val note = s"per-query min of $passes time-separated passes; " +
       "all per-pass samples under 'samples'"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"failed":$failJson,"passes":$passes,"note":"$note","sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"failed":$failJson,"passes":$passes,"cpus":$cpus,"defaultParallelism":$parallelism,"note":"$note","sf":"$sfDir"}"""
     println(line)
     // ALSO write the JSON to its own file: the driver's log-tail parse
     // has arrived clipped before (BENCH_r05 recorded "parsed": null) —
@@ -74,7 +69,7 @@ object Bench {
     // failed — no per-query map); the full per-query + per-pass samples
     // line lives in bench_out.json above. Printed after spark.stop() so
     // no shutdown logging can land after it.
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${succeeded.size},"failed":$failJson,"passes":$passes,"note":"per-query min of $passes passes; per-query map + per-pass samples in bench_out.json","sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${succeeded.size},"failed":$failJson,"passes":$passes,"cpus":$cpus,"defaultParallelism":$parallelism,"note":"per-query min of $passes passes; per-query map + per-pass samples in bench_out.json","sf":"$sfDir"}"""
     println(compact)
     System.out.flush()
   }

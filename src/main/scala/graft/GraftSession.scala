@@ -85,6 +85,10 @@ object GraftSession {
 
   /** Build a local session with `n` cores; shuffle partitions sized to the
     * core count (not the 200 default, which just makes tiny local tasks).
+    * The generated-code cache holds 2,000 classes instead of Spark's 100:
+    * a workload of a few dozen plans (an ETL tick, a query pass) evicts
+    * its own classes at 100 and compiles them again on every run. The
+    * cache is a static conf, so it can only be set here.
     */
   def local(n: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession
@@ -92,6 +96,7 @@ object GraftSession {
       .master(s"local[$n]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.extensions", "graft.ext.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -41,6 +41,21 @@ object GraftTable {
     */
   final case class Hist(height: Double, bins: Seq[HistBin])
 
+  /** Partition values (None = null) recorded by a mutation pass: each
+    * task adds to its own copy, the driver merges them as tasks finish.
+    */
+  private[operators] final class PartitionSet extends
+      org.apache.spark.util.AccumulatorV2[Option[String], Set[Option[String]]] {
+    private var set = Set.empty[Option[String]]
+    def isZero: Boolean = set.isEmpty
+    def copy(): PartitionSet = { val c = new PartitionSet; c.set = set; c }
+    def reset(): Unit = set = Set.empty
+    def add(v: Option[String]): Unit = set += v
+    def merge(o: org.apache.spark.util.AccumulatorV2[Option[String],
+      Set[Option[String]]]): Unit = set ++= o.value
+    def value: Set[Option[String]] = set
+  }
+
   /** One column's ANALYZE output ([[GraftTable.analyzeTable]]): NDV is
     * an HLL estimate (`approx_count_distinct`), extrema are canonical
     * Long/Double for integral/floating columns, lengths are bytes for
@@ -1176,11 +1191,6 @@ final class GraftTable(spark: SparkSession, val path: String,
         GraftTable.BloomEntry(3, t.drop(3).map(_.toLong))
   }
 
-  /** Table-relative file path a stats-log entry describes (both kinds). */
-  private def relOfStatEntry(entry: String): String =
-    if (entry.startsWith("!")) b64d(entry.split(";", -1)(1))
-    else b64d(entry.split(";", -1)(0))
-
   /** Persist a DELTA commit's stats entries for version `v` (atomic
     * move; a crash before this lands degrades to "commit without
     * stats"). Checkpoint versions carry their stats as PARQUET COLUMNS
@@ -1742,6 +1752,17 @@ final class GraftTable(spark: SparkSession, val path: String,
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(value)
     case None => s"$partitionCol=__HIVE_DEFAULT_PARTITION__"
   }
+
+  /** The partition VALUE of a directory name ([[partitionDirName]] inverted). */
+  private def partitionValueOf(dir: String): Option[String] =
+    dir.stripPrefix(s"$partitionCol=") match {
+      case "__HIVE_DEFAULT_PARTITION__" => None
+      case raw => Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(raw))
+    }
+
+  /** The partition directory of a table-relative file path. */
+  private def parentDir(f: String): String = f.split('/').dropRight(1).mkString("/")
 
   // the single file-read boundary: files carry PHYSICAL names, the
   // returned frame is LOGICAL (renameToLogical — identity when the
@@ -2354,8 +2375,7 @@ final class GraftTable(spark: SparkSession, val path: String,
     val statsEntries = collectStatsEntries(newFiles)
     // the restore REPLACES the whole live state: every partition dir of
     // the current head or the target drops, then the target re-adds
-    val dropDirs = (manifestFiles(base) ++ target)
-      .map(f => f.split('/').dropRight(1).mkString("/")).distinct
+    val dropDirs = (manifestFiles(base) ++ target).map(parentDir).distinct
     try {
       commitDelta(base, dropDirs, keep ++ newFiles, statsEntries = statsEntries)
     } catch {
@@ -2761,7 +2781,13 @@ final class GraftTable(spark: SparkSession, val path: String,
     * then commit a manifest where every file under a TOUCHED partition
     * from version `base` is replaced by the new files (an emptied
     * partition simply contributes none — no directory deletion, the old
-    * files stay for time travel).
+    * files stay for time travel). A commit adding no file, dropping no
+    * partition and carrying no marker is skipped (no version). The rows
+    * stream into the write with no barrier: a commit never deletes a
+    * file, so a recomputed task re-reads exactly the files its plan was
+    * built on. CHECK constraints are a second consumer of the rows, so
+    * a table declaring any stages them once: the checked rows are the
+    * written rows.
     *
     * LOST OCC RACE: when `partitionScoped` is true (the mutation's
     * logical read-set is contained in the partitions it writes — the
@@ -2780,12 +2806,26 @@ final class GraftTable(spark: SparkSession, val path: String,
                             base: Long, markers: Seq[String] = Nil,
                             partitionScoped: Boolean = false,
                             blindRetry: Boolean = false): this.type = {
-    enforceChecks(df) // throws BEFORE anything lands — O(commit rows)
-    val added = writeCommitFiles(df)
+    val added =
+      if (checks.isEmpty) writeCommitFiles(df)
+      else {
+        val staged = Staging.stage(df, "check_barrier")
+        // a violation throws BEFORE anything lands
+        try { enforceChecks(staged.df); writeCommitFiles(staged.df) }
+        finally staged.delete()
+      }
+    commitFiles(added, touchedVals, base, markers, partitionScoped, blindRetry)
+  }
+
+  /** The commit half of [[commitRewrite]], for files already written. */
+  private def commitFiles(added: Seq[String], touchedVals: Seq[Option[String]],
+                          base: Long, markers: Seq[String],
+                          partitionScoped: Boolean,
+                          blindRetry: Boolean = false): this.type = {
+    if (added.isEmpty && touchedVals.isEmpty && markers.isEmpty) return this
     val statsEntries = collectStatsEntries(added) // pre-commit: O(commit metadata)
     val dropDirs = touchedVals.map(partitionDirName)
-    val myDirs = (dropDirs ++
-      added.map(f => f.split('/').dropRight(1).mkString("/"))).distinct
+    val myDirs = (dropDirs ++ added.map(parentDir)).distinct
     var b = base
     while (true) {
       try {
@@ -2837,7 +2877,6 @@ final class GraftTable(spark: SparkSession, val path: String,
     val myTxnApps = markers.collect {
       case m if m.startsWith("#txn:") => m.stripPrefix("#txn:").split(":", 2)(0)
     }.toSet
-    def parentDir(f: String) = f.split('/').dropRight(1).mkString("/")
     val ok = (base + 1 to cur).forall { v =>
       parseEntryFile(manifestPath(v)) match {
         case None => false // mid-commit window — retry conservatively
@@ -2857,56 +2896,89 @@ final class GraftTable(spark: SparkSession, val path: String,
     if (ok) Some(cur) else None
   }
 
-  /** Append-only append + delta commit (no partition replaced).
-    * `partitionScoped` = the caller's read-set is contained in the
-    * partitions being appended (importOnce's existence probe).
-    */
-  private def commitAppend(df: DataFrame, base: Long,
-                           partitionScoped: Boolean = false): this.type =
-    commitRewrite(df, Seq.empty, base, partitionScoped = partitionScoped)
+  // --------------------------------------- the touched-partition rewrite
+  // Every copy-on-write mutation (upsert, deletes, update, merge) learns
+  // the partitions it touches (Hive directory values, None = null) in a
+  // pass it runs anyway, reads exactly their files of the base version,
+  // and commits its rewrite against that same touched set.
 
-  /** The partition VALUES (as Hive directory strings) present in `df` —
-    * metadata-scale collect, bounded by the partition count.
+  /** `df` behind a pass-through (`keep`) or drop-all filter recording
+    * each row's partition value; non-deterministic, so it stays put.
     */
-  private def partitionValsOf(df: DataFrame): Seq[Option[String]] =
-    df.select(col(partitionCol).cast("string")).distinct()
-      .collect().map(r => Option(r.getString(0))).toSeq
+  private def recordPartitions(df: DataFrame, keep: Boolean)
+      : (DataFrame, GraftTable.PartitionSet) = {
+    val seen = new GraftTable.PartitionSet
+    spark.sparkContext.register(seen)
+    val record = udf { (v: String) => seen.add(Option(v)); keep }.asNondeterministic()
+    (df.filter(record(col(partitionCol).cast("string"))), seen)
+  }
 
-  /** [[partitionValsOf]] for frames ALREADY distinct on the partition
-    * column (the touched-partition probes dedup before checkpointing):
-    * skips the plan-side distinct — one less exchange per mutation —
-    * and dedups the metadata-scale values on the driver instead.
+  /** `df`'s partition values: one job, none when AQE proves `df` empty. */
+  private def partitionsOf(df: DataFrame): Seq[Option[String]] = {
+    val (probe, seen) = recordPartitions(df.select(col(partitionCol)), keep = false)
+    probe.collect()
+    seen.value.toSeq
+  }
+
+  /** Stage a multi-consumer source once, learning its partitions on the way. */
+  private def stagePartitions(df: DataFrame, hint: String)
+      : (Staging.Staged, Seq[Option[String]]) = {
+    val (recorded, seen) = recordPartitions(df, keep = true)
+    (Staging.stage(recorded, hint), seen.value.toSeq)
+  }
+
+  /** The files of version `base` under the partitions `vals`. */
+  private def filesIn(base: Long, vals: Seq[Option[String]]): Seq[String] = {
+    val dirs = vals.map(partitionDirName).toSet
+    manifestFiles(base).filter(f => dirs.contains(parentDir(f)))
+  }
+
+  /** Version `base` of exactly the partitions `vals`, from their files. */
+  private def readPartitions(base: Long, vals: Seq[Option[String]]): DataFrame = {
+    val files = filesIn(base, vals)
+    if (files.isEmpty && sidecarSchemaOpt.isEmpty) readAt(base).limit(0)
+    else readResolved(files, base)
+  }
+
+  /** `df`'s rows in the partitions `vals`. */
+  private def inPartitions(df: DataFrame, vals: Seq[Option[String]]): DataFrame = {
+    val p = col(partitionCol).cast("string")
+    val named = if (vals.exists(_.nonEmpty)) p.isin(vals.flatten: _*) else lit(false)
+    df.filter(if (vals.contains(None)) named || p.isNull else named)
+  }
+
+  /** THE REWRITE CORE: commit `rewrite(touched partitions of base)` as
+    * their new content (rows it routes elsewhere append there).
     */
-  private def partitionValsOfDistinct(df: DataFrame): Seq[Option[String]] =
-    df.select(col(partitionCol).cast("string"))
-      .collect().map(r => Option(r.getString(0))).toSeq.distinct
+  private def rewriteTouched(base: Long, touched: Seq[Option[String]],
+                             markers: Seq[String] = Nil,
+                             partitionScoped: Boolean = false)
+                            (rewrite: DataFrame => DataFrame): this.type =
+    commitRewrite(rewrite(readPartitions(base, touched)), touched, base,
+      markers, partitionScoped)
 
-  /** Touched-partition values as (raw, hive-string) pairs — ONE
-    * metadata-scale collect serving both the statically pruned rewrite
-    * read ([[prunedToTouched]], raw values) and the manifest swap
-    * (strings, [[touchedStrings]]).
+  /** The partitions among `touched` where some row of `rows` is new or
+    * differs from its stored row: `rows` left-anti-joined against the
+    * stored rows, null-safe on every stored column. Without stored files
+    * there is nothing to test; a column type without an ordering (map,
+    * variant) cannot take the test, so every touched partition counts.
     */
-  private def touchedPairsOf(df: DataFrame): Array[org.apache.spark.sql.Row] =
-    df.select(col(partitionCol), col(partitionCol).cast("string"))
-      .distinct().collect()
-
-  private def touchedStrings(rows: Array[org.apache.spark.sql.Row]): Seq[Option[String]] =
-    rows.map(r => Option(r.getString(1))).toSeq
-
-  /** Read of exactly the partitions in `rows`: literal null-safe
-    * equalities prune at planning time (a semi join against the
-    * touched frame read every partition and filtered after). A
-    * pathological >4096-partition touch takes `semiFallback` (the old
-    * join shape) rather than a 4096-term predicate.
-    */
-  private def prunedToTouched(tgt: DataFrame,
-                              rows: Array[org.apache.spark.sql.Row],
-                              semiFallback: => DataFrame): DataFrame =
-    if (rows.isEmpty) tgt.limit(0)
-    else if (rows.length <= 4096)
-      tgt.filter(rows.map(r =>
-        col(partitionCol) <=> lit(r.get(0))).reduce(_ || _))
-    else semiFallback
+  private def changedPartitions(rows: DataFrame, touched: Seq[Option[String]],
+                                base: Long): Seq[Option[String]] = {
+    val files = filesIn(base, touched)
+    if (files.isEmpty) return touched
+    val current = readResolved(files, base)
+    val cols = current.columns.toSeq
+    if (!cols.forall(rows.columns.contains) || !current.schema.forall(f =>
+      org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType)))
+      touched
+    else {
+      val stored = current.select(cols.indices.map(i => col(cols(i)).as(s"__c$i")): _*)
+      partitionsOf(rows.join(stored,
+        cols.indices.map(i => col(cols(i)) <=> col(s"__c$i")).reduce(_ && _),
+        "left_anti"))
+    }
+  }
 
   private def schemaSidecar = java.nio.file.Paths.get(path, "_graft_schema.json")
 
@@ -3884,15 +3956,16 @@ final class GraftTable(spark: SparkSession, val path: String,
     val fresh = inc.join(existing, col(partitionCol) <=> col("__tp"), "left_anti")
     // partitionScoped: the logical read was "do MY partitions exist" —
     // an interleaved commit not touching them cannot change the answer
-    commitAppend(fresh, base, partitionScoped = true)
+    commitRewrite(fresh, Nil, base, partitionScoped = true)
   }
 
   /** Key-level upsert-REPLACE (K4): merge updates into the stored table,
-    * rewriting ONLY the partitions the updates touch (untouched day
-    * directories are never read or written). The touched-partition join
-    * is NULL-SAFE — upserting into the Hive default (null) partition
-    * must rewrite that partition's existing rows, not silently drop
-    * them when the manifest swaps its files.
+    * rewriting ONLY the partitions where an update row is new or differs
+    * from its stored row (untouched day directories are never read or
+    * written; an upsert that changes no row commits no version). The
+    * partition handling is NULL-SAFE — upserting into the Hive default
+    * (null) partition rewrites that partition's existing rows rather
+    * than dropping them when the manifest swaps its files.
     */
   def upsertReplace(updates: DataFrame, tiebreak: Seq[String] = Nil): this.type =
     doUpsertReplace(updates, tiebreak, Nil)
@@ -3900,23 +3973,24 @@ final class GraftTable(spark: SparkSession, val path: String,
   private def doUpsertReplace(updates: DataFrame, tiebreak: Seq[String],
                               markers: Seq[String]): this.type = {
     val base = ensureBaselineVersion()
-    val up = conform(updates, insertShaped = false) // updates carry ids
-    // statically pruned touched-partition read (the doMerge shape):
-    // only the touched partitions' FILES are opened, where the semi
-    // join read every partition and filtered after
-    val current = prunedToTouched(readAt(base), touchedPairsOf(up), {
-      val touched = up.select(col(partitionCol).as("__tp")).distinct()
-      readAt(base)
-        .join(touched, col(partitionCol) <=> col("__tp"), "left_semi")
-    })
-    val merged = KeyedTable.upsertReplace(
-      current.withColumn("__v", lit(1)), up.withColumn("__v", lit(2)),
-      keys, "__v", tiebreak).drop("__v")
-    // partitionScoped: this mutation reads exactly the partitions it
-    // rewrites — losers against disjoint-partition winners re-commit
-    // their files instead of re-running the merge
-    writePartitions(merged.select(current.columns.map(col).toSeq: _*), base,
-      markers = markers, partitionScoped = true)
+    // staged once for the changed-row test and the merge
+    val (staged, touched) = stagePartitions(
+      conform(updates, insertShaped = false), "upsert_source") // updates carry ids
+    try {
+      val up = staged.df
+      val changed = changedPartitions(up, touched, base)
+      // partitionScoped: this mutation reads exactly the partitions it
+      // rewrites — losers against disjoint-partition winners re-commit
+      // their files instead of re-running the merge. A skipped touched
+      // partition is a no-op at read time, so a commit interleaving into
+      // it serializes after this one. No change: only a #txn: marker.
+      if (changed.isEmpty) commitFiles(Nil, Nil, base, markers, partitionScoped = true)
+      else rewriteTouched(base, changed, markers, partitionScoped = true) { current =>
+        val upChanged = if (changed.size == touched.size) up else inPartitions(up, changed)
+        KeyedTable.upsertReplace(current.withColumn("__v", lit(1)),
+          upChanged.withColumn("__v", lit(2)), keys, "__v", tiebreak).drop("__v")
+      }
+    } finally staged.delete()
   }
 
   /** Latest batch id committed by writer `appId` (-1 = none) — the
@@ -4002,16 +4076,7 @@ final class GraftTable(spark: SparkSession, val path: String,
   def overwriteAll(rows: DataFrame): this.type = {
     val base = ensureBaselineVersion()
     val df = conform(rows)
-    val curVals: Seq[Option[String]] = manifestFiles(base)
-      .map(f => f.split('/').dropRight(1).mkString("/")).distinct
-      .map { dir =>
-        val raw = dir.stripPrefix(s"$partitionCol=")
-        if (raw == "__HIVE_DEFAULT_PARTITION__") None
-        else Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(raw))
-      }
-    val newVals = partitionValsOf(df)
-    commitRewrite(df, (curVals ++ newVals).distinct, base)
+    commitRewrite(df, (liveValsAt(base) ++ partitionsOf(df)).distinct, base)
   }
 
   /** DYNAMIC PARTITION OVERWRITE — the SQL `INSERT OVERWRITE` in
@@ -4026,7 +4091,7 @@ final class GraftTable(spark: SparkSession, val path: String,
   def overwritePartitions(rows: DataFrame): this.type = {
     val base = ensureBaselineVersion()
     val df = conform(rows)
-    commitRewrite(df, partitionValsOf(df), base, partitionScoped = true)
+    commitRewrite(df, partitionsOf(df), base, partitionScoped = true)
   }
 
   /** STATIC partition overwrite — `INSERT OVERWRITE t PARTITION
@@ -4042,7 +4107,7 @@ final class GraftTable(spark: SparkSession, val path: String,
     val base = ensureBaselineVersion()
     val df = conform(rows)
     val target = vals.toSet
-    val outside = partitionValsOf(df).filterNot(target)
+    val outside = partitionsOf(df).filterNot(target)
     require(outside.isEmpty,
       s"INSERT OVERWRITE PARTITION on $path: ${outside.size} incoming " +
         s"partition value(s) fall outside the target " +
@@ -4070,23 +4135,11 @@ final class GraftTable(spark: SparkSession, val path: String,
     // reads every row of the touched partitions, as it must
     val discover = PredicatePruning.mutationCandidates(this, cond,
       readAt(base), manifestFiles(base), base)
-    val touchedRows = touchedPairsOf(readResolved(discover, base).filter(matched))
-    if (touchedRows.isEmpty) return this // no match — no commit
-    val touchedVals = touchedStrings(touchedRows)
-    val current = prunedToTouched(readAt(base), touchedRows, {
-      val touched = spark.createDataset(touchedVals.map(_.orNull))(
-        org.apache.spark.sql.Encoders.STRING).toDF("__tp")
-      readAt(base)
-        .join(touched, col(partitionCol).cast("string") <=> col("__tp"), "left_semi")
-    })
-    val remaining = current.filter(!matched)
-    // touchedVals drives the manifest drop (a fully-deleted partition
-    // contributes no surviving rows, so it must NOT come from the
-    // remaining frame), the staged remaining rows drive the write
-    val staged = Staging.stage(remaining, "delete_where_barrier")
-    commitRewrite(staged.df, touchedVals, base)
-    staged.delete()
-    this
+    val touched = partitionsOf(readResolved(discover, base).filter(matched))
+    // touched drives the manifest drop: a fully-deleted partition
+    // contributes no surviving rows, so it cannot come from the rewrite
+    if (touched.isEmpty) this // no match — no commit
+    else rewriteTouched(base, touched)(_.filter(!matched))
   }
 
   /** Predicate UPDATE (the ANSI `UPDATE t SET c = e WHERE p`
@@ -4128,7 +4181,7 @@ final class GraftTable(spark: SparkSession, val path: String,
         s"updateWhereIn constrains a column not in the table: $c")
     }
     if (memberships.nonEmpty) guardMembershipNames("updateWhereIn", base)
-    var matched = coalesce(cond, lit(false))
+    val matched = coalesce(cond, lit(false))
     // touched-partition discovery through the skipping indexes, like
     // [[deleteWhereRewrite]] — an UPDATE on a stats-tracked column
     // reads candidate files only to find its partitions
@@ -4136,36 +4189,27 @@ final class GraftTable(spark: SparkSession, val path: String,
       tgt, manifestFiles(base), base)
     val probe = memberships
       .foldLeft(readResolved(discover, base).filter(matched))(membershipFilter)
-    val touchedRows = touchedPairsOf(probe)
-    if (touchedRows.isEmpty) return this // no match — no commit
-    val touchedVals = touchedStrings(touchedRows)
-    var current = prunedToTouched(tgt, touchedRows, {
-      val touched = spark.createDataset(touchedVals.map(_.orNull))(
-        org.apache.spark.sql.Encoders.STRING).toDF("__tp")
-      tgt.join(touched,
-        col(partitionCol).cast("string") <=> col("__tp"), "left_semi")
-    })
-    memberships.zipWithIndex.foreach { case (mem, i) =>
-      val (cur2, qual) = membershipMark(current, mem, i)
-      current = cur2
-      matched = matched && qual
+    val touched = partitionsOf(probe)
+    if (touched.isEmpty) return this // no match — no commit
+    rewriteTouched(base, touched) { current0 =>
+      val (current, qualified) = memberships.zipWithIndex
+        .foldLeft((current0, matched)) { case ((cur, m), (mem, i)) =>
+          val (cur2, qual) = membershipMark(cur, mem, i)
+          (cur2, m && qual)
+        }
+      // the select below projects exactly tgt's columns — membership
+      // markers drop with it
+      val updated = current.select(tgt.columns.toSeq.map { c =>
+        set.get(c).map(e => when(qualified, e.cast(typeOf(c))).otherwise(col(c)))
+          .getOrElse(col(c)).as(c)
+      }: _*)
+      // synthetic tables re-derive __gp: assigning a partition-source
+      // column moves the row. An UPDATE that never assigns an identity
+      // column re-lands stored (filled) values only — skip the
+      // watermark read (mayAllocate = false)
+      deriveGp(respecs(updated,
+        mayAllocate = identityColumnNames.exists(set.contains)))
     }
-    // the select below projects exactly tgt's columns — membership
-    // markers drop with it
-    val updated = current.select(tgt.columns.toSeq.map { c =>
-      set.get(c).map(e => when(matched, e.cast(typeOf(c))).otherwise(col(c)))
-        .getOrElse(col(c)).as(c)
-    }: _*)
-    // synthetic tables re-derive __gp: assigning a partition-source
-    // column moves the row. An UPDATE that never assigns an identity
-    // column re-lands stored (filled) values only — skip the
-    // watermark read (mayAllocate = false)
-    val staged = Staging.stage(deriveGp(respecs(updated,
-      mayAllocate = identityColumnNames.exists(set.contains))),
-      "update_where_barrier")
-    commitRewrite(staged.df, touchedVals, base)
-    staged.delete()
-    this
   }
 
   /** Insert-if-absent (K8): append only rows whose key is not yet
@@ -4177,9 +4221,11 @@ final class GraftTable(spark: SparkSession, val path: String,
     // keyed insert-if-absent: the caller PROVIDES the key by contract,
     // which on an identity-keyed table means providing the id
     val ins = conform(inserts, insertShaped = false)
-    val fresh = ins.join(readAt(base).select(keys.map(col).toSeq: _*).distinct(),
+    // no distinct on the stored keys: an anti join is insensitive to
+    // build-side duplicates, so a dedup would only add an exchange
+    val fresh = ins.join(readAt(base).select(keys.map(col).toSeq: _*),
       keys, "left_anti")
-    commitAppend(fresh, base)
+    commitRewrite(fresh, Nil, base)
   }
 
   /** Key-level upsert-MERGE (K3, non-default columns win). Null-safe on
@@ -4187,13 +4233,11 @@ final class GraftTable(spark: SparkSession, val path: String,
     */
   def upsertMerge(updates: DataFrame, defaults: Map[String, Any]): this.type = {
     val base = ensureBaselineVersion()
-    val up = conform(updates, insertShaped = false) // updates carry ids
-    val touched = up.select(col(partitionCol).as("__tp")).distinct()
-    val current = readAt(base)
-      .join(touched, col(partitionCol) <=> col("__tp"), "left_semi")
-    val merged = KeyedTable.upsertMerge(current, up, keys, defaults)
-    writePartitions(merged.select(current.columns.map(col).toSeq: _*), base,
-      partitionScoped = true)
+    val (staged, touched) = stagePartitions(
+      conform(updates, insertShaped = false), "upsert_source") // updates carry ids
+    try rewriteTouched(base, touched, partitionScoped = true)(
+      KeyedTable.upsertMerge(_, staged.df, keys, defaults))
+    finally staged.delete()
   }
 
   /** General MERGE INTO (the ANSI / Delta `MERGE` statement — the one
@@ -4449,18 +4493,10 @@ final class GraftTable(spark: SparkSession, val path: String,
         semiMatched(tgt, "left_anti").filter(anyCond)
           .select(col(partitionCol))
       }
-    // touched partitions: ONE metadata-scale collect of (raw, hive
-    // string) values — the strings were always collected for the
-    // manifest swap; collecting BEFORE the rewrite additionally turns
-    // the touched-partition read into a STATICALLY pruned scan
-    // ([[prunedToTouched]]) and drops one localCheckpoint job per merge.
-    val touchedRows = touchedPairsOf(matchedTouched.union(nmbsTouched))
-    val touchedVals = touchedStrings(touchedRows)
-    val current = prunedToTouched(tgt, touchedRows, {
-      val tp = matchedTouched.union(nmbsTouched).distinct()
-        .withColumnRenamed(partitionCol, "__tp")
-      tgt.join(tp, col(partitionCol) <=> col("__tp"), "left_semi")
-    })
+    // touched partitions, learned BEFORE the rewrite: the rewrite reads
+    // exactly their files ([[readPartitions]])
+    val touchedVals = partitionsOf(matchedTouched.union(nmbsTouched))
+    val current = readPartitions(base, touchedVals)
 
     // a residual-failing pair surfaces here as an UNMATCHED target row
     // (null source side) — by-source clauses see it, matched ones don't
@@ -4553,66 +4589,23 @@ final class GraftTable(spark: SparkSession, val path: String,
     // (filled) identity values only — skip the watermark read
     val mergeMayAllocate = notMatchedInsert.nonEmpty ||
       identityColumnNames.exists(c => assignments.exists(_._1 == c))
-    val staged = Staging.stage(deriveGp(respecs(written,
-      mayAllocate = mergeMayAllocate)), "merge_barrier")
-    commitRewrite(staged.df, touchedVals, base, markers)
-    staged.delete()
+    commitRewrite(deriveGp(respecs(written, mayAllocate = mergeMayAllocate)),
+      touchedVals, base, markers)
     true
   }
 
-  /** Keyed DELETE (K5): anti-join rewrite of only the touched
-    * partitions, committed as a new version. A partition whose every
-    * row is deleted simply contributes no files to the new manifest —
-    * no directory deletion, no dynamic-overwrite skip trap, and the
-    * pre-delete state stays readable via [[readAt]]. Collecting
-    * partition VALUES to the driver is metadata-scale (bounded by the
-    * partition count), not data-scale.
+  /** Keyed DELETE (K5): anti-join rewrite of only the partitions holding
+    * a matching key, as a new version (no match, no version). An emptied
+    * partition contributes no files to the manifest and stays readable
+    * via [[readAt]]. The keys are read by the probe and the rewrite and
+    * not staged: the rewrite reads only the probed partitions, so no
+    * evaluation of the keys can remove a row elsewhere.
     */
   def deleteByKeys(deleteKeys: DataFrame): this.type = {
     val base = ensureBaselineVersion()
-    // touched values collected once (they feed the manifest anyway);
-    // the rewrite reads a statically pruned scan — null-safe literal
-    // equalities, so the Hive default (null) partition still rewrites
-    val touchedRows = touchedPairsOf(
-      readAt(base).join(deleteKeys, keys, "left_semi"))
-    val current = prunedToTouched(readAt(base), touchedRows, {
-      val tp = readAt(base).join(deleteKeys, keys, "left_semi")
-        .select(partitionCol).distinct().withColumnRenamed(partitionCol, "__tp")
-      readAt(base).join(tp, col(partitionCol) <=> col("__tp"), "left_semi")
-    })
-    val remaining = KeyedTable.deleteByKeys(current, deleteKeys, keys)
-    val staged = Staging.stage(remaining, "delete_barrier")
-    commitRewrite(staged.df, touchedStrings(touchedRows), base)
-    staged.delete()
-    this
-  }
-
-  /** Rewrite touched partitions as a NEW VERSION: the rows land as
-    * fresh files and the manifest swaps the touched partitions' old
-    * files for them — the files the input plan reads are never deleted
-    * (they now belong to history), so recomputation after an executor
-    * loss is always safe. Staged once because both the write and the
-    * touched-partition collect consume the plan.
-    */
-  private def writePartitions(df: DataFrame, base: Long,
-                              clusterBy: Seq[String] = Nil,
-                              markers: Seq[String] = Nil,
-                              partitionScoped: Boolean = false): this.type = {
-    val staged = Staging.stage(df, "write_barrier")
-    // the cluster sort must sit BETWEEN the barrier and the write: the
-    // partitioned write requires an ordering on the partition column,
-    // and a staged frame carries no ordering metadata — so a
-    // pre-staging sort would be re-sorted (unstably) at write time,
-    // while (partitionCol, clusterBy...) here satisfies the writer's
-    // requirement prefix and survives into the files
-    val toWrite =
-      if (clusterBy.isEmpty) staged.df
-      else staged.df.sortWithinPartitions(
-        (partitionCol +: clusterBy).map(col): _*)
-    commitRewrite(toWrite, partitionValsOf(staged.df), base, markers,
-      partitionScoped = partitionScoped)
-    staged.delete()
-    this
+    val touched = partitionsOf(readAt(base).join(deleteKeys, keys, "left_semi"))
+    if (touched.isEmpty) this // no match — no commit
+    else rewriteTouched(base, touched)(KeyedTable.deleteByKeys(_, deleteKeys, keys))
   }
 
   /** COMPACTION — the small-files maintenance pass every incrementally
@@ -4622,8 +4615,8 @@ final class GraftTable(spark: SparkSession, val path: String,
     * the whole table on the partition column so every partition
     * directory rewrites as ONE file (all rows of a partition key land
     * in one task). CONTENT-INVARIANT by construction — the rewrite
-    * stages the table through the same write barrier every mutation
-    * uses; only the file layout changes (q184 hash-checks the content,
+    * reads one version and replaces every live partition of it; only
+    * the file layout changes (q184 hash-checks the content,
     * the spec checks the file-count collapse). At scale this is the
     * per-partition OPTIMIZE job; `parallelism` bounds the rewrite's
     * task width.
@@ -4641,9 +4634,23 @@ final class GraftTable(spark: SparkSession, val path: String,
   def compact(parallelism: Int, clusterBy: Seq[String]): this.type = {
     require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
     val base = ensureBaselineVersion()
-    writePartitions(readAt(base).repartition(parallelism, col(partitionCol)),
+    rewriteAll(readAt(base).repartition(parallelism, col(partitionCol)),
       base, clusterBy)
   }
+
+  /** Replace every live partition of `base` with `df`'s rows, sorted per
+    * task on (partitionCol, clusterBy...) — the writer's own required
+    * ordering as a prefix, so the sort survives into the files.
+    */
+  private def rewriteAll(df: DataFrame, base: Long, clusterBy: Seq[String]): this.type =
+    commitRewrite(
+      if (clusterBy.isEmpty) df
+      else df.sortWithinPartitions((partitionCol +: clusterBy).map(col): _*),
+      liveValsAt(base), base)
+
+  /** The partition values with live files at version `v` (metadata only). */
+  private def liveValsAt(v: Long): Seq[Option[String]] =
+    manifestFiles(v).map(parentDir).distinct.map(partitionValueOf)
 
   /** RANGE-CLUSTERING compaction — the `OPTIMIZE` shape that makes
     * FILE-LEVEL zone maps selective (plain [[compact]] collapses each
@@ -4664,7 +4671,7 @@ final class GraftTable(spark: SparkSession, val path: String,
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     require(rangeBy.nonEmpty, "compactRange needs range columns")
     val base = ensureBaselineVersion()
-    writePartitions(readAt(base).repartitionByRange(buckets,
+    rewriteAll(readAt(base).repartitionByRange(buckets,
       (partitionCol +: rangeBy).map(col): _*), base, clusterBy = rangeBy)
   }
 
@@ -4720,16 +4727,8 @@ final class GraftTable(spark: SparkSession, val path: String,
     val base = ensureBaselineVersion()
     val (live, dvdFiles, fraction) = dvdLiveFiles(base)
     if (dvdFiles.isEmpty || fraction <= maxFraction) return (false, fraction)
-    val dirs = dvdFiles.map(f => f.split('/').dropRight(1).mkString("/")).toSet
-    val touchedFiles = live.filter(f =>
-      dirs.contains(f.split('/').dropRight(1).mkString("/")))
-    val touchedVals: Seq[Option[String]] = dirs.toSeq.sorted.map { dir =>
-      val raw = dir.stripPrefix(s"$partitionCol=")
-      if (raw == "__HIVE_DEFAULT_PARTITION__") None
-      else Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(raw))
-    }
-    commitRewrite(readResolved(touchedFiles, base), touchedVals, base)
+    val touchedVals = dvdFiles.map(parentDir).distinct.map(partitionValueOf)
+    rewriteTouched(base, touchedVals)(identity)
     (true, fraction)
   }
 

@@ -72,9 +72,11 @@ object KeyedTable {
 
   /** Keyed DELETE as an anti-join rewrite (reference `delete_entity`,
     * `storage/azurestoragewrapper.py:260-267`; missing keys tolerated).
+    * The keys are not deduplicated: an anti join ignores duplicates on
+    * its build side, and a dedup would only add an exchange.
     */
   def deleteByKeys(target: DataFrame, deleteKeys: DataFrame, keys: Seq[String]): DataFrame =
-    target.join(deleteKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    target.join(deleteKeys.select(keys.map(col): _*), keys, "left_anti")
 
   /** Insert-if-absent (reference `server/etl.py:148-149`): append only
     * rows whose key is not yet present.

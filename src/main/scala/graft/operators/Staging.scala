@@ -10,14 +10,16 @@ import org.apache.spark.sql.DataFrame
   *      producing plan ONCE and let every consumer read the staged file.
   *      A `persist()` would leak into the shared session and is memory-
   *      bounded; a staging file is disk-bounded and spill-free.
-  *   2. Read-then-mutate barriers ([[GraftTable]] upsert/delete): the
-  *      merge plan reads the very files the write replaces, so the merged
-  *      result must be DURABLY materialized before any file is touched.
-  *      `persist()` is NOT durable — on a cluster a lost executor discards
-  *      its cached blocks and Spark recomputes them from the already-
-  *      mutated directories, silently dropping rows. A staging write has
-  *      no lineage back to the table files: recomputation re-reads the
-  *      staging parquet, never the mutated table.
+  *   2. One evaluation of a mutation source that several steps consume
+  *      ([[GraftTable]] upserts stage their updates: the touched
+  *      partitions, the changed-row test and the merge must all see the
+  *      same rows). A [[GraftTable]] rewrite itself needs NO barrier
+  *      between its read and its write: a commit adds files and swaps
+  *      manifest entries but never deletes or overwrites a file, so a
+  *      task recomputed after an executor loss re-reads exactly the
+  *      files its plan was built on. `persist()` would not do for (1)
+  *      on a cluster: a lost executor discards its cached blocks and
+  *      Spark recomputes them, possibly to different rows.
   *
   * Mechanism selection: with `graft.staging.dir` SET (point it at
   * job-scoped cluster storage — HDFS/S3), every stage is a parquet
@@ -32,8 +34,8 @@ import org.apache.spark.sql.DataFrame
   * round-trip — several times faster per iteration at small scale.
   * Durability trade: checkpoint blocks die with the JVM; if a block is
   * lost the JOB FAILS (lineage is truncated — Spark cannot silently
-  * recompute from mutated inputs, so the [[GraftTable]] barrier
-  * correctness argument still holds; what is lost is restartability,
+  * recompute the staged rows into different ones, so every consumer
+  * still sees one evaluation; what is lost is restartability,
   * which single-JVM mode never had). Each JVM stages parquet under its
   * own `jvm_<pid>_<nonce>` subdir so exit cleanup removes only this
   * JVM's files, never a shared root another job still reads.

@@ -66,6 +66,101 @@ class GraftTableSpec extends SparkSpec {
     assert(t.read.select("n").as[Int].collect().head == 7)
   }
 
+  /** Data files physically under the table directory, log excluded. */
+  private def dataFilesOnDisk(t: GraftTable): Set[String] = {
+    val root = java.nio.file.Paths.get(t.path)
+    val s = Files.walk(root)
+    try {
+      val it = s.iterator()
+      var out = Set.empty[String]
+      while (it.hasNext) {
+        val rel = root.relativize(it.next()).toString
+        if (rel.endsWith(".parquet") && !rel.startsWith("_graft")) out += rel
+      }
+      out
+    } finally s.close()
+  }
+
+  test("upsertReplace of rows identical to the stored ones commits no version and writes no file") {
+    val t = freshTable().createIfNotExists(rows().schema)
+    t.importOnce(rows(("d1", "p", "r1", 1), ("d1", "p", "r2", 2), ("d2", "q", "r1", 3)))
+    val v = t.currentVersion
+    val onDisk = dataFilesOnDisk(t)
+    t.upsertReplace(rows(("d1", "p", "r2", 2), ("d2", "q", "r1", 3)))
+    assert(t.currentVersion == v, "an upsert that changes no row must not commit")
+    assert(dataFilesOnDisk(t) == onDisk, "an upsert that changes no row must not write")
+    assert(t.read.count() == 3)
+  }
+
+  test("upsertReplace rewrites only the partitions where a row changes") {
+    val t = freshTable().createIfNotExists(rows().schema)
+    t.importOnce(rows(("d1", "a", "r1", 1), ("d2", "b", "r1", 2),
+      ("d3", "c", "r1", 3), ("d3", "c", "r2", 4)))
+    val before = t.liveFilesAt(t.currentVersion)
+    // d1 identical, d2 changes a value, d3 gains a key next to identical rows
+    t.upsertReplace(rows(("d1", "a", "r1", 1), ("d2", "b", "r1", 20),
+      ("d3", "c", "r1", 3), ("d3", "c", "r9", 9)))
+    val after = t.liveFilesAt(t.currentVersion)
+    def in(fs: Seq[String], day: String) = fs.filter(_.startsWith(s"day=$day/")).toSet
+    assert(in(after, "d1") == in(before, "d1"), "an unchanged partition must keep its files")
+    assert(in(after, "d2") != in(before, "d2") && in(after, "d3") != in(before, "d3"))
+    assert(t.read.select("day", "rk", "n").as[(String, String, Int)].collect().toSet ==
+      Set(("d1", "r1", 1), ("d2", "r1", 20), ("d3", "r1", 3), ("d3", "r2", 4),
+        ("d3", "r9", 9)))
+  }
+
+  test("deleteByKeys with no matching key commits no version") {
+    val t = freshTable().createIfNotExists(rows().schema)
+    t.importOnce(rows(("d1", "p", "r1", 1), ("d2", "q", "r1", 2)))
+    val v = t.currentVersion
+    t.deleteByKeys(Seq(("p", "r9"), ("x", "r1")).toDF("pk", "rk"))
+    assert(t.currentVersion == v, "a no-match delete must not commit a version")
+    t.deleteByKeys(Seq.empty[(String, String)].toDF("pk", "rk"))
+    assert(t.currentVersion == v, "an empty key set must not commit a version")
+    assert(t.read.count() == 2)
+  }
+
+  test("upsert and delete in the NULL partition skip unchanged rows and rewrite changed ones") {
+    val t = freshTable().createIfNotExists(rows().schema)
+    val nul = null.asInstanceOf[String]
+    t.importOnce(rows((nul, "p", "rA", 1), (nul, "q", "rB", 2), ("d1", "z", "r1", 3)))
+    val v = t.currentVersion
+    t.upsertReplace(rows((nul, "p", "rA", 1)))
+    assert(t.currentVersion == v, "an identical null-partition row changes nothing")
+    t.upsertReplace(rows((nul, "p", "rA", 1), (nul, "p", "rC", 5)))
+    assert(t.currentVersion == v + 1)
+    assert(t.read.filter($"day".isNull).select("rk", "n").as[(String, Int)].collect().toMap
+      == Map("rA" -> 1, "rB" -> 2, "rC" -> 5))
+    t.deleteByKeys(Seq(("q", "rB")).toDF("pk", "rk"))
+    assert(t.read.filter($"day".isNull).select("rk").as[String].collect().toSet
+      == Set("rA", "rC"))
+    assert(t.read.filter($"day" === "d1").count() == 1)
+  }
+
+  test("duplicate update keys resolve by tiebreak when one duplicate equals the stored row") {
+    val t = freshTable().createIfNotExists(rows().schema)
+    t.importOnce(rows(("d1", "p", "r1", 1), ("d2", "q", "r1", 7)))
+    // the differing duplicate wins the tiebreak (n ascending)
+    t.upsertReplace(rows(("d1", "p", "r1", 1), ("d1", "p", "r1", 0)), tiebreak = Seq("n"))
+    // the stored-equal duplicate wins: content unchanged, still one row per key
+    t.upsertReplace(rows(("d2", "q", "r1", 7), ("d2", "q", "r1", 8)), tiebreak = Seq("n"))
+    assert(t.read.select("day", "n").as[(String, Int)].collect().sorted.toSeq
+      == Seq(("d1", 0), ("d2", 7)))
+  }
+
+  test("upsertReplaceBatch of identical rows still advances txnVersion") {
+    val t = freshTable().createIfNotExists(rows().schema)
+    t.importOnce(rows(("d1", "p", "r1", 1)))
+    val v = t.currentVersion
+    assert(t.upsertReplaceBatch("app", 0L, rows(("d1", "p", "r1", 1))))
+    assert(t.txnVersion("app") == 0L)
+    assert(t.currentVersion == v + 1, "the batch marker commits on its own")
+    assert(t.liveFilesAt(v + 1).toSet == t.liveFilesAt(v).toSet)
+    assert(!t.upsertReplaceBatch("app", 0L, rows(("d1", "p", "r1", 9))),
+      "a replayed batch must skip")
+    assert(t.read.select("n").as[Int].collect().toSeq == Seq(1))
+  }
+
   test("upsertMerge keeps stored values where the update carries defaults") {
     val t = freshTable().createIfNotExists(rows().schema)
     t.importOnce(rows(("d1", "p", "r1", 5)))
