@@ -2941,10 +2941,16 @@ final class GraftTable(spark: SparkSession, val path: String,
   }
 
   /** `df`'s rows in the partitions `vals`. */
-  private def inPartitions(df: DataFrame, vals: Seq[Option[String]]): DataFrame = {
+  private def inPartitions(df: DataFrame, vals: Seq[Option[String]]): DataFrame =
+    df.filter(partitionIn(vals))
+
+  /** Whether a row's partition is among `vals` (null for a null partition
+    * when `vals` has no None).
+    */
+  private def partitionIn(vals: Seq[Option[String]]): org.apache.spark.sql.Column = {
     val p = col(partitionCol).cast("string")
     val named = if (vals.exists(_.nonEmpty)) p.isin(vals.flatten: _*) else lit(false)
-    df.filter(if (vals.contains(None)) named || p.isNull else named)
+    if (vals.contains(None)) named || p.isNull else named
   }
 
   /** THE REWRITE CORE: commit `rewrite(touched partitions of base)` as
@@ -3944,16 +3950,21 @@ final class GraftTable(spark: SparkSession, val path: String,
   }
 
   /** Append rows for partitions not yet present (U2 import-once): the
-    * existence check prunes to partition values, the write appends only
-    * the new partitions. Null-safe on the partition value — rows of the
-    * Hive default (null) partition import once like any other.
+    * existence check reads the manifest's partition list, not the data,
+    * and the write appends only the new partitions. Null-safe on the
+    * partition value — rows of the Hive default (null) partition import
+    * once like any other.
     */
   def importOnce(incoming: DataFrame): this.type = {
     val base = ensureBaselineVersion()
     // re-imports legitimately carry identity values (exported rows)
     val inc = conform(incoming, insertShaped = false)
-    val existing = readAt(base).select(col(partitionCol).as("__tp")).distinct()
-    val fresh = inc.join(existing, col(partitionCol) <=> col("__tp"), "left_anti")
+    // the manifest lists the live partitions; coalesce makes the test
+    // null-safe (a null partition imports exactly when none is live).
+    // The rebalance lands each new partition in one file (size-bounded
+    // splits for a hot one) whatever the incoming frame's partitioning
+    val fresh = inc.filter(!coalesce(partitionIn(liveValsAt(base)), lit(false)))
+      .hint("rebalance", col(partitionCol))
     // partitionScoped: the logical read was "do MY partitions exist" —
     // an interleaved commit not touching them cannot change the answer
     commitRewrite(fresh, Nil, base, partitionScoped = true)

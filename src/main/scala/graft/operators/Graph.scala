@@ -42,18 +42,12 @@ object Graph {
     val und = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .union(edges.select(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b")))
     // stage the (small) edge frame once: it is re-read every round, and
-    // its producing plan may be an expensive dedup pipeline. The
-    // repartition NORMALIZES the staged layout to AQE-advised partition
-    // sizes before the N-round loop — the producing plan otherwise
-    // dictates the partitioning every round re-reads (a union of two
-    // scan projections: 2× the scan's task count of half-sized pieces;
-    // a dedup pipeline: whatever its last exchange left). Measured
-    // A/B at sf0.1: q61 0.77×, q83 0.84× (same-window controls 1.00×).
-    // NOTE the hash layout itself does NOT survive the checkpoint under
-    // AQE (plans/r15/cc_round_*.txt show UnknownPartitioning on the
-    // staged scan) — the win is the normalized partition count/sizes,
-    // not exchange elision.
-    val ust = Staging.stage(und.repartition(col("b")), "cc_edges")
+    // its producing plan may be an expensive dedup pipeline. It is
+    // staged in the layout that plan leaves: a hash layout does not
+    // survive the checkpoint under AQE (the staged scan reports
+    // UnknownPartitioning and every round join re-exchanges it), so a
+    // repartition in front of the stage adds a shuffle and elides none.
+    val ust = Staging.stage(und, "cc_edges")
     val u = ust.df
     // Seed = the FIRST propagation round folded into initialization:
     // label(x) = min over {x} ∪ neighbors(x), one aggregate over the
@@ -90,41 +84,6 @@ object Graph {
     val out = cur.df.select(col("id"), col("label").as("cluster"))
     ust.delete()
     out
-  }
-
-  /** Dev hook for [[graft.tools.InnerPlans]]: ONE label-propagation
-    * round's plan (the plan every [[connectedComponents]] round pays),
-    * in both staging shapes — BEFORE r15 the edge table staged with
-    * whatever layout its producing plan left; AFTER it stages through
-    * an explicit repartition, normalizing the partition count/sizes the
-    * N rounds re-read. The dumps also document that the hash layout
-    * does NOT survive the checkpoint under AQE (both scans report
-    * UnknownPartitioning) — the round-join shape is identical; what
-    * changes is the staged table's partitioning geometry.
-    */
-  private[graft] def explainCcRound(edges: DataFrame, srcCol: String,
-                                    dstCol: String): Unit = {
-    val und = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .union(edges.select(col(dstCol).cast("long").as("a"),
-        col(srcCol).cast("long").as("b")))
-    def round(u: DataFrame, labels: DataFrame): DataFrame = labels
-      .unionByName(u.join(labels.withColumnRenamed("id", "b2"),
-          col("b") === col("b2"))
-        .select(col("a").as("id"), col("label")))
-      .groupBy(col("id")).agg(min(col("label")).as("label"))
-    println("---- cc round, BEFORE (edge table staged unpartitioned)")
-    val ub = Staging.stage(und, "ccx_before")
-    val seedB = Staging.stage(ub.df.groupBy(col("a").as("id"))
-      .agg(min(least(col("a"), col("b"))).as("label")), "ccx_seed_b")
-    round(ub.df, seedB.df).explain("formatted")
-    seedB.delete(); ub.delete()
-    println("---- cc round, AFTER (edge table staged hash-partitioned on b)")
-    val ua = Staging.stage(und.repartition(col("b")), "ccx_after")
-    val seedA = Staging.stage(ua.df.groupBy(col("a").as("id"))
-      .agg(min(least(col("a"), col("b"))).as("label")), "ccx_seed_a")
-    round(ua.df, seedA.df).explain("formatted")
-    seedA.delete(); ua.delete()
   }
 
   /** Connected components by STAR CONTRACTION (alternating large-star /
@@ -270,11 +229,9 @@ object Graph {
     val Scale = 1000000000L
     val und = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .union(edges.select(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b")))
-    // staged with an AQE-normalized layout before the iteration loop
-    // (the [[connectedComponents]] staging discipline — see the note
-    // there: the repartition normalizes partition count/sizes; the hash
-    // layout itself does not survive the checkpoint under AQE)
-    val ust = Staging.stage(und.repartition(col("a")), "pr_edges")
+    // staged once before the iteration loop, in its producing layout
+    // (see the [[connectedComponents]] staging note)
+    val ust = Staging.stage(und, "pr_edges")
     val u = ust.df
     val deg = u.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
     var cur = Staging.stage(deg.select(col("id"), lit(Scale).as("pr"), col("deg")), "pr_0")
@@ -324,9 +281,9 @@ object Graph {
     val Scale = 1000000000L
     val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    // staged with an AQE-normalized layout before the iteration loop
+    // staged once before the iteration loop, in its producing layout
     // (see the [[connectedComponents]] staging note)
-    val est = Staging.stage(e.repartition(col("src")), "prd_edges")
+    val est = Staging.stage(e, "prd_edges")
     val ed = est.df
     val nodes = ed.select(col("src").as("id"))
       .union(ed.select(col("dst").as("id"))).distinct()
@@ -511,13 +468,11 @@ object Graph {
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    // stage the UNDIRECTED list with an AQE-normalized layout: each
-    // relaxation round re-reads it directly instead of re-deriving the
-    // union per round (see the [[connectedComponents]] staging note)
+    // stage the UNDIRECTED list once: each relaxation round re-reads it
+    // directly instead of re-deriving the union per round (see the
+    // [[connectedComponents]] staging note)
     val cst = Staging.stage(
-      canon.union(canon.select(col("b").as("a"), col("a").as("b")))
-        .repartition(col("b")),
-      "bfs_edges")
+      canon.union(canon.select(col("b").as("a"), col("a").as("b"))), "bfs_edges")
     val und = cst.df
     var cur = Staging.stage(
       seeds.select(col(seedCol).cast("long").as("id")).distinct()

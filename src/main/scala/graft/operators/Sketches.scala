@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+
+import graft.expr.{QdNode, QdigestAggregator}
 
 /** Mergeable sketches for cardinality and frequency at 100 TB — the
   * sub-linear-state tier the exact operators (q17 distinct counts, q58
@@ -217,10 +219,14 @@ object Sketches {
     * own count stays BELOW t = max(n/k, 1) absorbs its children. State
     * size is O(k·L) regardless of input size.
     *
-    * Scale shape: one corpus scan into ≤ 2^16 leaf counts (map-side
-    * combining groupBy); every compression pass is a sketch-sized frame
-    * staged at O(1) plan depth. Merge = bucket-wise count sum +
-    * recompress at the merged n — no raw data touched.
+    * Scale shape: one corpus scan and ONE aggregation exchange. Each
+    * group's rows fold into an id → count map ([[graft.expr.QdigestAggregator]],
+    * summed map-side), so one group's state is bounded by the tree's
+    * 2^17 − 1 nodes whatever the input size, and the whole 16-level
+    * compression runs as a loop over that map inside the group's task;
+    * different groups still run in different tasks. The output is
+    * staged once. Merge = the same fold over the states' rows (node-wise
+    * count sum) + recompress at the merged n — no raw data touched.
     */
   def qdigestState(df: DataFrame, valCol: String, lo: Double, hi: Double,
                    k: Int): DataFrame =
@@ -229,10 +235,10 @@ object Sketches {
 
   /** Per-GROUP q-digest state — one sketch per group key (the
     * ANALYZE-per-partition shape: per-day / per-language quantiles at
-    * corpus scale). State ≤ |groups|·O(k·L) rows; the per-group
-    * threshold n_g/k is a metadata-scale frame broadcast into each
-    * compression pass, so nothing is collected and every pass is a
-    * grouped sketch-sized frame. The group column travels as `grp`.
+    * corpus scale). State ≤ |groups|·O(k·L) rows; each group compresses
+    * at its own threshold max(n_g div k, 1) in its own fold, and nothing
+    * is collected to the driver. The group column travels as `grp`; rows
+    * whose group is null yield no state.
     */
   def qdigestStateBy(df: DataFrame, grpCol: String, valCol: String,
                      lo: Double, hi: Double, k: Int): DataFrame = {
@@ -240,10 +246,8 @@ object Sketches {
     require(hi > lo, s"need hi > lo, got [$lo, $hi)")
     val leaf = least(greatest(floor((col(valCol) - lo) * 65536 / (hi - lo)),
       lit(0.0)), lit(65535.0)).cast("long")
-    val leaves = df.filter(col(valCol).isNotNull)
-      .select(col(grpCol).as("grp"), (leaf + 65536L).as("id"))
-      .groupBy("grp", "id").agg(count(lit(1)).as("cnt"))
-    qdigestCompress(leaves, k)
+    qdigestCompress(df.filter(col(valCol).isNotNull)
+      .select(col(grpCol).as("grp"), (leaf + 65536L).as("id"), lit(1L).as("cnt")), k)
   }
 
   /** Merge q-digest states (additive counts) and recompress at the
@@ -254,65 +258,26 @@ object Sketches {
   def qdigestMerge(states: Seq[DataFrame], k: Int): DataFrame = {
     require(states.nonEmpty, "qdigestMerge needs at least one state")
     qdigestCompress(
-      states.map(_.withColumn("grp", lit("")))
-        .reduce(_ unionByName _)
-        .groupBy("grp", "id").agg(sum(col("cnt")).as("cnt")),
-      k).drop("grp")
+      states.map(_.withColumn("grp", lit(""))).reduce(_ unionByName _), k)
+      .drop("grp")
   }
 
   /** Merge per-group q-digest states (group+node-wise sum + recompress). */
   def qdigestMergeBy(states: Seq[DataFrame], k: Int): DataFrame = {
     require(states.nonEmpty, "qdigestMergeBy needs at least one state")
-    qdigestCompress(
-      states.reduce(_ unionByName _)
-        .groupBy("grp", "id").agg(sum(col("cnt")).as("cnt")),
-      k)
+    qdigestCompress(states.reduce(_ unionByName _), k)
   }
 
   private def qdigestCompress(nodes: DataFrame, k: Int): DataFrame = {
-    // r15 shape: the 16 bottom-up level passes run as ONE chained plan
-    // (one action, one exchange per level) instead of 16 staged rounds
-    // of several exchanges + a localCheckpoint each. Per level, a node
-    // at level l maps to its parent id and every other node maps to
-    // itself, so ONE aggregate per (grp, key) collects each compression
-    // decision's complete evidence — the ≤2 children plus the parent's
-    // own count — as a ≤3-element list, and a row-local CASE replays the
-    // canonical rule exactly: children present AND children-sum + parent
-    // < t → the group collapses to the parent carrying the combined
-    // count; otherwise every collected member re-emits unchanged. The
-    // per-group threshold t_g = max(n_g/k, 1) rides along as a column
-    // (functionally dependent on grp), so no per-level join is needed.
-    // Identical arithmetic to the staged rounds (additive long counts,
-    // order-insensitive), with (grp, pid) keys keeping every level's
-    // exchange cluster-parallel (the r14 single-partition hash(grp)
-    // dead end is recorded in OPTIMIZATION_r14.md).
-    val in = Staging.stage(nodes, "qd_in")
-    val thr = in.df.groupBy("grp")
-      .agg(greatest(expr(s"sum(cnt) div $k"), lit(1L)).as("t"))
-    var cur = in.df.join(broadcast(thr), Seq("grp"))
-    (16 to 1 by -1).foreach { l =>
-      val lowId = 1L << l
-      val highId = 1L << (l + 1)
-      val key = when(col("id") >= lowId && col("id") < highId,
-        expr("id div 2")).otherwise(col("id"))
-      val childSum =
-        "aggregate(filter(ns, n -> n.id != pid), 0L, (a, n) -> a + n.cnt)"
-      val pCnt = "coalesce(filter(ns, n -> n.id = pid)[0].cnt, 0L)"
-      val emit = expr(s"""
-        CASE WHEN size(filter(ns, n -> n.id != pid)) > 0
-              AND $childSum + $pCnt < t
-             THEN array(named_struct('id', pid, 'cnt', $childSum + $pCnt))
-             ELSE ns END""")
-      cur = cur
-        .groupBy(col("grp"), col("t"), key.as("pid"))
-        .agg(collect_list(struct(col("id"), col("cnt"))).as("ns"))
-        .select(col("grp"), col("t"), explode(emit).as("n"))
-        .select(col("grp"), col("t"), col("n.id").as("id"),
-          col("n.cnt").as("cnt"))
-    }
-    val out = Staging.stage(cur.select("grp", "id", "cnt"), "qd_out")
-    in.delete()
-    out.df
+    // one aggregation exchange: each group's id → count map folds in one
+    // task (≤ 2^17 − 1 nodes), and its finish runs all 16 levels
+    val fold = udaf(new QdigestAggregator(k), Encoders.product[QdNode])
+    val out = nodes.filter(col("grp").isNotNull)
+      .groupBy(col("grp")).agg(fold(col("id"), col("cnt")).as("ns"))
+      .select(col("grp"), explode(col("ns")).as("n"))
+      .select(col("grp"), col("n.id").as("id"), col("n.cnt").as("cnt"))
+    // staged once: qdigestQuantile reads the state twice
+    Staging.stage(out, "qd_out").df
   }
 
   /** Quantile answers from a q-digest: nodes sort by their EXCLUSIVE
@@ -347,75 +312,6 @@ object Sketches {
       .groupBy(col("q_milli")).agg(min(col("ub")).as("ub"))
       .select(col("q_milli"), col("ub"),
         (lit(lo) + col("ub").cast("double") * (hi - lo) / 65536).as("v_est"))
-  }
-
-  /** Dev hook for [[graft.tools.InnerPlans]]: the q-digest compression
-    * plans before/after r15 — the final query's explain only shows the
-    * staged output scan. BEFORE: ONE of the 16 staged level rounds as
-    * the pre-r15 code built it (children/others split, per-parent join,
-    * anti/semi/union reassembly — several exchanges + a checkpoint,
-    * ×16 sequential actions). AFTER: the whole 16-level compression as
-    * the single chained plan [[qdigestCompress]] now runs (one
-    * (grp, key) aggregate exchange per level, one action).
-    */
-  private[graft] def explainQdigestCompress(df: DataFrame, valCol: String,
-                                            lo: Double, hi: Double,
-                                            k: Int): Unit = {
-    val leaf = least(greatest(floor((col(valCol) - lo) * 65536 / (hi - lo)),
-      lit(0.0)), lit(65535.0)).cast("long")
-    val leaves = df.filter(col(valCol).isNotNull)
-      .select(lit("").as("grp"), (leaf + 65536L).as("id"))
-      .groupBy("grp", "id").agg(count(lit(1)).as("cnt"))
-    println("---- q-digest compression, BEFORE (one of 16 staged level rounds)")
-    val thr = Staging.stage(leaves.groupBy("grp")
-      .agg(greatest(expr(s"sum(cnt) div $k"), lit(1L)).as("t")), "qdx_thr")
-    val cur = Staging.stage(leaves, "qdx_c16")
-    val l = 16
-    val lowId = 1L << l
-    val highId = 1L << (l + 1)
-    val children = cur.df.filter(col("id") >= lowId && col("id") < highId)
-    val others = cur.df.filter(col("id") < lowId || col("id") >= highId)
-    val g = children.groupBy(col("grp"), expr("id div 2").as("pid"))
-      .agg(sum(col("cnt")).as("ccnt"))
-      .join(others.select(col("grp"), col("id").as("pid"), col("cnt").as("pcnt")),
-        Seq("grp", "pid"), "left")
-      .join(broadcast(thr.df), Seq("grp"))
-      .withColumn("comb", col("ccnt") + coalesce(col("pcnt"), lit(0L)))
-    others
-      .join(g.filter(col("comb") < col("t"))
-        .select(col("grp"), col("pid").as("id")), Seq("grp", "id"), "left_anti")
-      .unionByName(children.withColumn("pid", expr("id div 2"))
-        .join(g.filter(col("comb") >= col("t")).select("grp", "pid"),
-          Seq("grp", "pid"), "left_semi")
-        .drop("pid"))
-      .unionByName(g.filter(col("comb") < col("t"))
-        .select(col("grp"), col("pid").as("id"), col("comb").as("cnt")))
-      .explain("formatted")
-    cur.delete(); thr.delete()
-    println("---- q-digest compression, AFTER (all 16 levels, one chained plan)")
-    val thr2 = leaves.groupBy("grp")
-      .agg(greatest(expr(s"sum(cnt) div $k"), lit(1L)).as("t"))
-    var cc = leaves.join(broadcast(thr2), Seq("grp"))
-    (16 to 1 by -1).foreach { lv =>
-      val lo2 = 1L << lv
-      val hi2 = 1L << (lv + 1)
-      val key = when(col("id") >= lo2 && col("id") < hi2,
-        expr("id div 2")).otherwise(col("id"))
-      val childSum =
-        "aggregate(filter(ns, n -> n.id != pid), 0L, (a, n) -> a + n.cnt)"
-      val pCnt = "coalesce(filter(ns, n -> n.id = pid)[0].cnt, 0L)"
-      val emit = expr(s"""
-        CASE WHEN size(filter(ns, n -> n.id != pid)) > 0
-              AND $childSum + $pCnt < t
-             THEN array(named_struct('id', pid, 'cnt', $childSum + $pCnt))
-             ELSE ns END""")
-      cc = cc.groupBy(col("grp"), col("t"), key.as("pid"))
-        .agg(collect_list(struct(col("id"), col("cnt"))).as("ns"))
-        .select(col("grp"), col("t"), explode(emit).as("n"))
-        .select(col("grp"), col("t"), col("n.id").as("id"),
-          col("n.cnt").as("cnt"))
-    }
-    cc.select("grp", "id", "cnt").explain("formatted")
   }
 
   /** Per-group quantile answers from a [[qdigestStateBy]] state — the

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
 
@@ -37,16 +36,6 @@ object InnerPlans {
     println("==== nnd_score (one NN-descent scoring pass, before/after r15)")
     graft.operators.SimilaritySearch.explainDescentScore(
       Tables.embeddings(spark, sfDir), "vec_id", "embedding", 6)
-
-    println("==== qd_compress (q-digest compression, before/after r15)")
-    graft.operators.Sketches.explainQdigestCompress(
-      Tables.events(spark, sfDir).select(col("value").as("v")), "v",
-      0.0, 100.0, 64)
-
-    println("==== cc_round (one label-propagation round, before/after r15)")
-    val ev = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id")).limit(10000)
-    graft.operators.Graph.explainCcRound(ev, "event_id", "user_id")
 
     spark.stop()
   }

@@ -47,6 +47,23 @@ class GraftTableSpec extends SparkSpec {
     assert(got == Map("d1" -> 1, "d2" -> 2, "d3" -> 3))
   }
 
+  test("importOnce: the null partition imports once; a repeated import commits no version") {
+    val t = freshTable().createIfNotExists(rows().schema)
+    val nul = null.asInstanceOf[String]
+    t.importOnce(rows(("d1", "p", "r1", 1)))
+    // no null partition is live yet: its rows import next to a new day
+    t.importOnce(rows((nul, "p", "rA", 1), (nul, "q", "rB", 2),
+      ("d1", "p", "r1", 99), ("d2", "p", "r1", 2)))
+    val v = t.currentVersion
+    val onDisk = dataFilesOnDisk(t)
+    t.importOnce(rows((nul, "p", "rA", 1), (nul, "q", "rB", 2), ("d2", "p", "r1", 2)))
+    t.importOnce(rows((nul, "x", "rZ", 7)))
+    assert(t.currentVersion == v, "an import of live partitions only must not commit")
+    assert(dataFilesOnDisk(t) == onDisk, "an import of live partitions only must not write")
+    assert(t.read.select("day", "rk", "n").as[(String, String, Int)].collect().toSet ==
+      Set((nul, "rA", 1), (nul, "rB", 2), ("d1", "r1", 1), ("d2", "r1", 2)))
+  }
+
   test("upsertReplace rewrites only touched partitions, keyed winner") {
     val t = freshTable().createIfNotExists(rows().schema)
     t.importOnce(rows(("d1", "p", "r1", 1), ("d1", "p", "r2", 2), ("d2", "p", "r1", 3)))

@@ -51,13 +51,17 @@ class MutationJobBudgetSpec extends SparkSpec {
       "deleteByKeys, no keys" ->
         jobsOf(t.deleteByKeys(Seq.empty[(String, String)].toDF("pk", "rk"))),
       "insertIfAbsent" ->
-        jobsOf(t.insertIfAbsent(rows(("d5", "p", "r5", 5), ("d1", "p", "r1", 0)))))
+        jobsOf(t.insertIfAbsent(rows(("d5", "p", "r5", 5), ("d1", "p", "r1", 0)))),
+      "importOnce, nothing new" ->
+        jobsOf(t.importOnce(rows(("d1", "p", "r1", 0), ("d5", "p", "r7", 7)))))
     info(counts.map { case (k, n) => s"$k: $n" }.mkString("; "))
-    // before the rewrite core: 7, 7, 6, 3, 1 and 4 jobs
+    // before the rewrite core: 7, 7, 6, 3, 1 and 4 jobs; importOnce ran 3
+    // while it scanned the table for its live partitions
     val ceilings = Map(
       "upsert, rows change" -> 5, "upsert, no row changes" -> 3,
       "deleteByKeys, match" -> 4, "deleteByKeys, no match" -> 2,
-      "deleteByKeys, no keys" -> 0, "insertIfAbsent" -> 2)
+      "deleteByKeys, no keys" -> 0, "insertIfAbsent" -> 2,
+      "importOnce, nothing new" -> 1)
     counts.foreach { case (k, n) =>
       assert(n <= ceilings(k), s"$k ran $n Spark jobs, budget ${ceilings(k)}")
     }

@@ -1,5 +1,10 @@
 package graft.operators
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 /** Q-digest quantile sketch: compression semantics, the rank-error
@@ -102,6 +107,123 @@ class QdigestSpec extends SparkSpec {
     val ba = Sketches.qdigestMergeBy(Seq(h2, h1), 1024)
       .as[(String, Long, Long)].collect().toSeq.sorted
     assert(ab === ba)
+  }
+
+  // Reference model: the level-by-level formulation, one chained
+  // (grp, t, key) aggregate per level. Per level, a node at level l maps
+  // to its parent id and every other node to itself, so each group
+  // collects one decision's evidence (the ≤ 2 children and the parent's
+  // own count); the children collapse into the parent when present and
+  // children-sum + parent < t = max(n_g div k, 1).
+  private def refCompress(nodes: DataFrame, k: Int): DataFrame = {
+    val thr = nodes.groupBy("grp")
+      .agg(greatest(expr(s"sum(cnt) div $k"), lit(1L)).as("t"))
+    var cur = nodes.join(broadcast(thr), Seq("grp"))
+    (16 to 1 by -1).foreach { l =>
+      val lowId = 1L << l
+      val highId = 1L << (l + 1)
+      val key = when(col("id") >= lowId && col("id") < highId,
+        expr("id div 2")).otherwise(col("id"))
+      val childSum =
+        "aggregate(filter(ns, n -> n.id != pid), 0L, (a, n) -> a + n.cnt)"
+      val pCnt = "coalesce(filter(ns, n -> n.id = pid)[0].cnt, 0L)"
+      val emit = expr(s"""
+        CASE WHEN size(filter(ns, n -> n.id != pid)) > 0
+              AND $childSum + $pCnt < t
+             THEN array(named_struct('id', pid, 'cnt', $childSum + $pCnt))
+             ELSE ns END""")
+      cur = cur
+        .groupBy(col("grp"), col("t"), key.as("pid"))
+        .agg(collect_list(struct(col("id"), col("cnt"))).as("ns"))
+        .select(col("grp"), col("t"), explode(emit).as("n"))
+        .select(col("grp"), col("t"), col("n.id").as("id"),
+          col("n.cnt").as("cnt"))
+    }
+    cur.select("grp", "id", "cnt")
+  }
+
+  private def refStateBy(df: DataFrame, grpCol: String, valCol: String,
+                         lo: Double, hi: Double, k: Int): DataFrame = {
+    val leaf = least(greatest(floor((col(valCol) - lo) * 65536 / (hi - lo)),
+      lit(0.0)), lit(65535.0)).cast("long")
+    refCompress(df.filter(col(valCol).isNotNull)
+      .select(col(grpCol).as("grp"), (leaf + 65536L).as("id"))
+      .groupBy("grp", "id").agg(count(lit(1)).as("cnt")), k)
+  }
+
+  private def refMergeBy(states: Seq[DataFrame], k: Int): DataFrame =
+    refCompress(states.reduce(_ unionByName _)
+      .groupBy("grp", "id").agg(sum(col("cnt")).as("cnt")), k)
+
+  private def rows(state: DataFrame): Seq[(String, Long, Long)] =
+    state.select("grp", "id", "cnt").as[(String, Long, Long)].collect().toSeq.sorted
+
+  // Fixed-seed groups of 20,000 / 3,000 / 50 values over [0, 1000):
+  // uniform spread, hot values (deep nodes), a tight cluster, values
+  // clamped below lo and above hi, null values, and rows of a null group
+  // (which yield no state in either formulation).
+  private lazy val mixed: DataFrame = {
+    val rnd = new scala.util.Random(20041103L)
+    def draw(): Option[Double] = rnd.nextInt(20) match {
+      case 0 => None
+      case 1 => Some(-50.0 - rnd.nextInt(100))
+      case 2 => Some(1000.0 + rnd.nextInt(100))
+      case 3 | 4 | 5 => Some(Seq(7.0, 250.5, 999.99)(rnd.nextInt(3)))
+      case 6 | 7 => Some(500.0 + rnd.nextGaussian() * 0.05)
+      case _ => Some(rnd.nextDouble() * 1000.0)
+    }
+    val groups = Seq[(String, Int)](("a", 20000), ("b", 3000), ("c", 50), (null, 40))
+    groups.flatMap { case (g, n) => Seq.fill(n)((g, draw())) }
+      .toDF("g", "v").localCheckpoint(true)
+  }
+
+  test("one-pass compression equals the level-by-level formulation, row for row") {
+    for (k <- Seq(2, 7, 64, 4096)) {
+      val got = rows(Sketches.qdigestStateBy(mixed, "g", "v", 0.0, 1000.0, k))
+      assert(got === rows(refStateBy(mixed, "g", "v", 0.0, 1000.0, k)),
+        s"grouped state, k=$k")
+      assert(got.map(_._1).distinct.sorted === Seq("a", "b", "c"))
+      val one = mixed.filter(col("g") === "a")
+      assert(rows(Sketches.qdigestState(one, "v", 0.0, 1000.0, k)
+          .withColumn("grp", lit(""))) ===
+        rows(refStateBy(one.withColumn("g", lit("")), "g", "v", 0.0, 1000.0, k)),
+        s"single-group state, k=$k")
+    }
+  }
+
+  test("merged states equal the level-by-level merge, in both orders") {
+    for (k <- Seq(7, 64)) {
+      val halves = Seq(0, 1).map { r =>
+        Sketches.qdigestStateBy(
+          mixed.filter(abs(hash(col("v"))) % 2 === r), "g", "v", 0.0, 1000.0, k)
+      }
+      val want = rows(refMergeBy(halves, k))
+      assert(rows(Sketches.qdigestMergeBy(halves, k)) === want, s"k=$k")
+      assert(rows(Sketches.qdigestMergeBy(halves.reverse, k)) === want, s"k=$k")
+      assert(rows(refMergeBy(halves.reverse, k)) === want, s"k=$k")
+      val single = halves.map(h => h.filter(col("grp") === "a").drop("grp"))
+      assert(rows(Sketches.qdigestMerge(single, k).withColumn("grp", lit("a"))) ===
+        want.filter(_._1 == "a"), s"single-group merge, k=$k")
+    }
+  }
+
+  test("q-digest state plus quantiles stays within its job budget") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val df = (0 until 5000).map(i => (i * 7 % 1000).toDouble).toDF("v")
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val n = try {
+      val st = Sketches.qdigestState(df, "v", 0.0, 1000.0, 64)
+      Sketches.qdigestQuantile(st, 0.0, 1000.0, qs).collect()
+      ListenerDrain(spark.sparkContext)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+    info(s"qdigestState + qdigestQuantile: $n jobs")
+    // a ceiling: the level-by-level formulation ran 25 jobs here
+    assert(n <= 6, s"q-digest ran $n Spark jobs, budget 6")
   }
 
   test("validation: bad k, bad range, bad quantiles rejected") {
