@@ -139,12 +139,6 @@ object GraftTable {
     */
   @volatile private[operators] var orphanGraceMs: Long = 10L * 60 * 1000
 
-  /** Diagnostic: distributed snapshot-frame pruning JOBS executed
-    * (checkpoint-backed candidate pruning). `GraftCatalogSpec` asserts
-    * an `IN (k values)` statement costs ONE, not k.
-    */
-  val snapshotPruneJobs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** The session graft DATA-file writes run on: ONE clone of the
     * caller's session per session (weakly held — dying sessions drop
     * their clone) with `spark.sql.parquet.outputTimestampType` pinned
@@ -320,40 +314,46 @@ object GraftTable {
   /** One live file in a PARQUET CHECKPOINT MANIFEST: every
     * [[CheckpointEvery]]-th version persists the full live set as a
     * parquet table (file path, row count, zone maps and Bloom filters
-    * AS COLUMNS) instead of a driver-serialized JSON list — so at any
-    * table size, opening the table reads parquet metadata, checkpoint
-    * construction is DataFrame ops over the previous checkpoint plus
-    * ≤ [[CheckpointEvery]] small deltas (the driver never materializes
-    * the live set to build one), and data skipping evaluates as a
-    * DISTRIBUTED filter over the checkpoint before any file path is
-    * collected. The Delta-parquet-checkpoint discipline. `rows` = -1
-    * when unknown (stats-free commit); empty maps = no stats recorded.
+    * AS COLUMNS) instead of a JSON list in the manifest, so the JSON
+    * stays O(commit) at any table size. A reader collects the rows
+    * once per JVM ([[cachedCkpt]]) and evaluates data skipping on the
+    * driver over them. `rows` = -1 when unknown (stats-free commit);
+    * empty maps = no stats recorded.
     */
   private[operators] final case class CkptRow(file: String, rows: Long,
                                               stats: Map[String, CkptCol],
                                               blooms: Map[String, CkptBloom])
 
-  /** JVM-wide cache of collected checkpoint file lists, keyed by the
-    * immutable (table path, version, nonce) identity of a committed
-    * checkpoint — one parquet read per checkpoint per JVM, LRU-bounded.
+  /** A version resolved: its live files plus the zone maps and Bloom
+    * entries recorded for them (entries of dead files may linger —
+    * lookups are by live path).
     */
-  private val ckptListCache =
-    new java.util.LinkedHashMap[(String, Long, String), Seq[String]](16, 0.75f, true) {
+  private[operators] final case class Snapshot(
+    files: Seq[String], stats: Map[String, FileStats],
+    blooms: Map[(String, String), BloomEntry])
+
+  /** JVM-wide cache of collected checkpoints, keyed by the immutable
+    * (table path, version, nonce) identity of a committed checkpoint:
+    * one parquet read per checkpoint per JVM, LRU-bounded. Its size is
+    * live files × indexed columns per checkpoint, for at most 64.
+    */
+  private val ckptCache =
+    new java.util.LinkedHashMap[(String, Long, String), Snapshot](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, String), Seq[String]]): Boolean =
+          e: java.util.Map.Entry[(String, Long, String), Snapshot]): Boolean =
         size > 64
     }
 
-  private[operators] def cachedCkptList(key: (String, Long, String))
-                                       (load: => Seq[String]): Seq[String] = {
-    val hit = ckptListCache.synchronized(ckptListCache.get(key))
+  private[operators] def cachedCkpt(key: (String, Long, String))
+                                   (load: => Snapshot): Snapshot = {
+    val hit = ckptCache.synchronized(ckptCache.get(key))
     if (hit != null) return hit
     // load OUTSIDE the monitor — it runs a Spark collect, and holding
     // the JVM-global lock through it would stall every other table's
     // cache hits; a racing duplicate load is harmless (same immutable
     // checkpoint content)
     val v = load
-    ckptListCache.synchronized(ckptListCache.put(key, v))
+    ckptCache.synchronized(ckptCache.put(key, v))
     v
   }
 }
@@ -632,42 +632,71 @@ final class GraftTable(spark: SparkSession, val path: String,
   private def isDelta(entries: Seq[String]): Boolean =
     entries.headOption.contains("#delta")
 
-  /** Relative data-file paths LIVE in `v`: replay the delta chain back
-    * to the nearest full checkpoint (≤ [[GraftTable.CheckpointEvery]]
-    * manifests) and apply forward. Never touches the data tree.
-    * Entries starting with `#` are commit METADATA (delta marker,
-    * deletion-vector / transaction / checkpoint markers), never live
-    * files. A `#ckpt:<nonce>` base resolves its file list from the
-    * parquet checkpoint (collected once per JVM, cached).
+  /** The manifest chain of `v`: the base version (a full JSON listing
+    * or a `#ckpt:` parquet checkpoint), its entries, and the ≤
+    * [[GraftTable.CheckpointEvery]] delta manifests after it, oldest
+    * first — the one log walk every replay shares.
     */
-  private def manifestFiles(v: Long): Seq[String] = {
+  private def chainOf(v: Long): (Long, Seq[String], Seq[(Long, Seq[String])]) = {
     var at = v
     var cur = rawEntries(at)
-    val deltas = scala.collection.mutable.ListBuffer.empty[Seq[String]]
+    val deltas = scala.collection.mutable.ListBuffer.empty[(Long, Seq[String])]
     while (isDelta(cur)) {
-      deltas.prepend(cur)
+      deltas.prepend((at, cur))
       at -= 1
       cur = rawEntries(at)
     }
-    val baseAt = at
-    var live = cur.collectFirst {
+    (at, cur, deltas.toSeq)
+  }
+
+  /** Version `v` resolved from its chain: the base's live files and
+    * stats — a checkpoint's rows (collected once per JVM,
+    * [[GraftTable.cachedCkpt]]), or a full-JSON listing with its stats
+    * chain — then each delta applied with its own stats file. Entries
+    * starting with `#` are commit METADATA (delta marker, deletion-
+    * vector / transaction / checkpoint markers), never live files.
+    * Never touches the data tree.
+    */
+  private def snapshot(v: Long): GraftTable.Snapshot = {
+    val (baseAt, base, deltas) = chainOf(v)
+    val start = base.collectFirst {
       case e if e.startsWith("#ckpt:") => e.stripPrefix("#ckpt:")
     } match {
       case Some(nonce) =>
-        GraftTable.cachedCkptList((path, baseAt, nonce)) {
-          spark.read.schema(ckptSchema)
+        GraftTable.cachedCkpt((path, baseAt, nonce)) {
+          fromCkptRows(spark.read.schema(ckptSchema)
             .parquet(ckptDirFor(baseAt, nonce).toString)
-            .select("file").collect().map(_.getString(0)).toSeq.sorted
+            .as(ckptEncoder).collect().toSeq)
         }
-      case None => cur.filterNot(_.startsWith("#"))
+      case None =>
+        applyDelta(GraftTable.Snapshot(Nil, Map.empty, Map.empty), Nil,
+          base.filterNot(_.startsWith("#")), statChainEntries(baseAt))
     }
-    deltas.foreach { d =>
-      val drops = d.collect { case e if e.startsWith("-") => e.drop(1) }
-      val adds = d.collect { case e if e.startsWith("+") => e.drop(1) }
-      live = live.filterNot(f => drops.exists(dir => f.startsWith(dir + "/"))) ++ adds
+    deltas.foldLeft(start) { case (s, (dv, entries)) =>
+      applyDelta(s,
+        entries.collect { case e if e.startsWith("-") => e.drop(1) },
+        entries.collect { case e if e.startsWith("+") => e.drop(1) },
+        parseEntryFile(statsPath(dv)).getOrElse(Nil))
     }
-    live
   }
+
+  /** `s` after one commit: files under `dropDirs` leave the live set,
+    * `added` join it, and the commit's stats/Bloom `entries` (stats-log
+    * encoding; `#` headers skipped) describe them.
+    */
+  private def applyDelta(s: GraftTable.Snapshot, dropDirs: Seq[String],
+                         added: Seq[String],
+                         entries: Seq[String]): GraftTable.Snapshot = {
+    val (bl, st) = entries.filterNot(_.startsWith("#")).partition(_.startsWith("!"))
+    GraftTable.Snapshot(
+      s.files.filterNot(f => dropDirs.exists(d => f.startsWith(d + "/"))) ++ added,
+      s.stats ++ st.map(decodeStats), s.blooms ++ bl.map(decodeBloom))
+  }
+
+  /** Relative data-file paths LIVE in `v` (≤
+    * [[GraftTable.CheckpointEvery]] manifest reads).
+    */
+  private def manifestFiles(v: Long): Seq[String] = snapshot(v).files
 
   // ------------------------------------------ parquet checkpoint manifests
 
@@ -679,88 +708,46 @@ final class GraftTable(spark: SparkSession, val path: String,
     org.apache.spark.sql.Encoders.product[GraftTable.CkptRow]
   private lazy val ckptSchema = ckptEncoder.schema
 
-  private def toCkptDF(rows: Seq[GraftTable.CkptRow]): DataFrame =
-    spark.createDataset(rows)(ckptEncoder).toDF()
-
-  /** Checkpoint rows for `files` with whatever of this commit's encoded
-    * stats/bloom `entries` describe them (missing stats ⇒ empty maps —
-    * unprunable, never wrong).
+  /** Write `rows` as the checkpoint `(v, nonce)` and return its
+    * resolved form: a caller that caches it once the manifest is
+    * committed saves the next reader the collect job.
     */
-  private def ckptRowsFor(files: Seq[String],
-                          entries: Seq[String]): Seq[GraftTable.CkptRow] = {
-    val stats = entries.filterNot(_.startsWith("!")).map(decodeStats).toMap
-    val blooms = entries.filter(_.startsWith("!")).map(decodeBloom)
-      .groupBy(_._1._1)
-    files.map { f =>
-      val fs = stats.get(f)
-      val bl = blooms.getOrElse(f, Seq.empty).map { case ((_, c), be) =>
-        c -> GraftTable.CkptBloom(be.k, be.words.toSeq)
-      }.toMap
+  private def writeCkpt(v: Long, nonce: String,
+                        rows: Seq[GraftTable.CkptRow]): GraftTable.Snapshot = {
+    java.nio.file.Files.createDirectories(ckptRoot)
+    spark.createDataset(rows)(ckptEncoder).write.mode(SaveMode.Overwrite)
+      .parquet(ckptDirFor(v, nonce).toString)
+    fromCkptRows(rows)
+  }
+
+  /** Checkpoint rows for `s`'s live files (a file without stats gets
+    * `rows` = -1 and empty maps — unprunable, never wrong).
+    */
+  private def ckptRows(s: GraftTable.Snapshot): Seq[GraftTable.CkptRow] = {
+    val blooms = s.blooms.groupBy(_._1._1)
+    s.files.map { f =>
+      val fs = s.stats.get(f)
       GraftTable.CkptRow(f, fs.map(_.rows).getOrElse(-1L),
         fs.map(_.cols.map { case (c, cs) =>
           c -> GraftTable.CkptCol(cs.tag.toString, cs.nulls,
             cs.min.orNull, cs.max.orNull)
         }).getOrElse(Map.empty),
-        bl)
+        blooms.getOrElse(f, Map.empty).map { case ((_, c), be) =>
+          c -> GraftTable.CkptBloom(be.k, be.words.toSeq)
+        })
     }
   }
 
-  /** True when `v`'s delta chain bottoms out on a parquet checkpoint —
-    * the snapshot/pruning DataFrame path applies; legacy all-JSON
-    * chains keep the driver-map path.
-    */
-  private def hasCkptBase(v: Long): Boolean = {
-    var at = v
-    var cur = rawEntries(at)
-    while (isDelta(cur)) { at -= 1; cur = rawEntries(at) }
-    cur.exists(_.startsWith("#ckpt:"))
-  }
-
-  /** The live set at `v` as a DataFrame of [[GraftTable.CkptRow]]s:
-    * nearest checkpoint parquet (or, for a legacy full-JSON base, its
-    * driver entries + legacy stats maps) composed with ≤
-    * [[GraftTable.CheckpointEvery]] delta manifests — drops are a
-    * filter, adds a union of commit-sized local rows with their delta
-    * stats. The driver never materializes the full live set; data
-    * skipping filters THIS frame before any path is collected, and the
-    * next checkpoint writes it back out. O(live files) work happens in
-    * the cluster, not the driver.
-    */
-  private def snapshotDF(v: Long): DataFrame = {
-    var at = v
-    var cur = rawEntries(at)
-    val deltas = scala.collection.mutable.ListBuffer.empty[(Long, Seq[String])]
-    while (isDelta(cur)) {
-      deltas.prepend((at, cur))
-      at -= 1
-      cur = rawEntries(at)
-    }
-    val base = cur.collectFirst {
-      case e if e.startsWith("#ckpt:") => e.stripPrefix("#ckpt:")
-    } match {
-      case Some(nonce) =>
-        spark.read.schema(ckptSchema).parquet(ckptDirFor(at, nonce).toString)
-      case None => // legacy full-JSON base: one-time driver materialization
-        val files = cur.filterNot(_.startsWith("#"))
-        val st = replayStats(at)
-        val bl = replayBlooms(at)
-        val entries = st.map { case (rel, fs) => encodeStats(rel, fs) }.toSeq ++
-          bl.map { case ((rel, c), be) => encodeBloom(rel, c, be.k, be.words.toSeq) }
-        toCkptDF(ckptRowsFor(files, entries))
-    }
-    deltas.foldLeft(base) { case (df, (dv, entries)) =>
-      val drops = entries.collect { case e if e.startsWith("-") => e.drop(1) }
-      val adds = entries.collect { case e if e.startsWith("+") => e.drop(1) }
-      val statsEnts = parseEntryFile(statsPath(dv)).getOrElse(Seq.empty)
-        .filterNot(_.startsWith("#"))
-      val dropped =
-        if (drops.isEmpty) df
-        else df.filter(!drops.map(d => col("file").startsWith(d + "/"))
-          .reduce(_ || _))
-      if (adds.isEmpty) dropped
-      else dropped.unionByName(toCkptDF(ckptRowsFor(adds, statsEnts)))
-    }
-  }
+  private def fromCkptRows(rows: Seq[GraftTable.CkptRow]): GraftTable.Snapshot =
+    GraftTable.Snapshot(rows.map(_.file).sorted,
+      rows.collect { case r if r.rows >= 0 =>
+        r.file -> FileStats(r.rows, r.stats.map { case (c, cc) =>
+          c -> ColStats(cc.tag.head, cc.nulls, Option(cc.mn), Option(cc.mx))
+        })
+      }.toMap,
+      rows.flatMap(r => r.blooms.map { case (c, b) =>
+        (r.file, c) -> GraftTable.BloomEntry(b.k, b.words.toArray)
+      }).toMap)
 
   /** STREAMING-SINK IDEMPOTENCY STATE (the Delta `SetTransaction`
     * discipline): the highest batch id committed per writer app, replayed
@@ -770,16 +757,9 @@ final class GraftTable(spark: SparkSession, val path: String,
     */
   private def txnState(v: Long): Map[String, Long] = {
     if (v <= 0L) return Map.empty
-    var at = v
-    var cur = rawEntries(at)
-    val chain = scala.collection.mutable.ListBuffer(cur)
-    while (isDelta(cur)) {
-      at -= 1
-      cur = rawEntries(at)
-      chain.prepend(cur)
-    }
+    val (_, base, deltas) = chainOf(v)
     // earliest-to-latest; later markers for the same app win
-    chain.toSeq.flatMap(_.collect {
+    (base +: deltas.map(_._2)).flatMap(_.collect {
       case e if e.startsWith("#txn:") =>
         val parts = e.stripPrefix("#txn:").split(":", 2)
         parts(0) -> parts(1).toLong
@@ -828,14 +808,13 @@ final class GraftTable(spark: SparkSession, val path: String,
     *
     * A checkpoint version writes the full live set — with per-file
     * stats and Bloom words as COLUMNS — as a parquet table under
-    * `_graft_log/ckpt/` (built from the previous snapshot DataFrame, so
-    * the driver never materializes the live list), and its JSON
-    * manifest carries only markers plus `#ckpt:<nonce>`: O(1) driver
-    * JSON at any table size, with the latest `#txn:` marker per app
-    * carried forward so idempotency state survives checkpointing. A
-    * losing OCC writer deletes its checkpoint dir (it is referenced by
-    * no manifest); a crash before the manifest link leaves an orphan
-    * dir that vacuum sweeps.
+    * `_graft_log/ckpt/` (the previous version's snapshot with this
+    * commit applied), and its JSON manifest carries only markers plus
+    * `#ckpt:<nonce>`: O(1) driver JSON at any table size, with the
+    * latest `#txn:` marker per app carried forward so idempotency state
+    * survives checkpointing. A losing OCC writer deletes its checkpoint
+    * dir (it is referenced by no manifest); a crash before the manifest
+    * link leaves an orphan dir that vacuum sweeps.
     */
   private def commitDelta(base: Long, dropDirs: Seq[String],
                           added: Seq[String],
@@ -843,18 +822,9 @@ final class GraftTable(spark: SparkSession, val path: String,
                           statsEntries: Seq[String] = Nil): Long = {
     val v = base + 1
     if (v % CheckpointEvery == 0) {
-      val prev = snapshotDF(base)
-      val dropped =
-        if (dropDirs.isEmpty) prev
-        else prev.filter(!dropDirs.map(d => col("file").startsWith(d + "/"))
-          .reduce(_ || _))
-      val snap =
-        if (added.isEmpty) dropped
-        else dropped.unionByName(toCkptDF(ckptRowsFor(added, statsEntries)))
       val nonce = java.util.UUID.randomUUID().toString.take(8)
-      java.nio.file.Files.createDirectories(ckptRoot)
-      snap.write.mode(SaveMode.Overwrite)
-        .parquet(ckptDirFor(v, nonce).toString)
+      val snap = writeCkpt(v, nonce,
+        ckptRows(applyDelta(snapshot(base), dropDirs, added, statsEntries)))
       val newTxnApps = markers.collect {
         case e if e.startsWith("#txn:") => e.stripPrefix("#txn:").split(":", 2)(0)
       }.toSet
@@ -877,6 +847,7 @@ final class GraftTable(spark: SparkSession, val path: String,
             Fs.deleteTree(ckptDirFor(v, nonce))
             throw e
         }
+      GraftTable.cachedCkpt((path, nv, nonce))(snap)
       maybeAutoAnalyze(nv)
       nv
     } else {
@@ -1138,36 +1109,26 @@ final class GraftTable(spark: SparkSession, val path: String,
     }
   }
 
-  /** Stats of every live-or-recent file as of `v`: replay the stats log
-    * back to the nearest full stats checkpoint (missing files — crash
-    * windows, stats-free commits — are skipped; their files are simply
-    * unprunable). Entries for dead files are harmless: lookups are by
-    * live path.
+  /** Stats-log entries describing a FULL-JSON base `v`: its stats file
+    * and earlier ones, back to a legacy `#sfull` file or the oldest
+    * version (missing files — crash windows, stats-free commits — are
+    * skipped; their files are simply unprunable). Entries for dead
+    * files are harmless: lookups are by live path. A checkpoint base
+    * carries its stats as columns instead.
     */
   private def statChainEntries(v: Long): Seq[String] = {
-    val oldest = versions.headOption.getOrElse(return Nil)
     var at = v
     var done = false
     val chain = scala.collection.mutable.ListBuffer.empty[Seq[String]]
-    while (!done && at >= oldest) {
+    while (!done && at >= 1 && java.nio.file.Files.exists(manifestPath(at))) {
       parseEntryFile(statsPath(at)).foreach { es =>
         chain.prepend(es)
         if (es.headOption.contains("#sfull")) done = true
       }
       at -= 1
     }
-    chain.toSeq.flatten.filterNot(_.startsWith("#"))
+    chain.toSeq.flatten
   }
-
-  private def replayStats(v: Long): Map[String, FileStats] =
-    statChainEntries(v).filterNot(_.startsWith("!")).map(decodeStats).toMap
-
-  /** (file, column) → Bloom filter as of `v` (same chain walk/override
-    * semantics as [[replayStats]]; missing blooms degrade to
-    * unprunable).
-    */
-  private def replayBlooms(v: Long): Map[(String, String), GraftTable.BloomEntry] =
-    statChainEntries(v).filter(_.startsWith("!")).map(decodeBloom).toMap
 
   /** Bloom entry v2: `!2;b64(rel);b64(col);k;w0;...;w(bits/64 - 1)` —
     * the filter GEOMETRY travels with the entry (bits = 64·wordCount,
@@ -1261,106 +1222,55 @@ final class GraftTable(spark: SparkSession, val path: String,
     * without stats always survive.
     */
   def candidateFiles(c: String, lo: Any, hi: Any): Seq[String] =
-    candidateFilesAt(physicalName(c), lo, hi, currentVersion)
+    candidateFilesRangeAt(physicalName(c), Some(lo), Some(hi), currentVersion)
 
-  // ---------------------------------- distributed data-skipping (DF path)
+  // ------------------------------------------------------ data skipping
   //
-  // When the version's chain bottoms on a parquet checkpoint, pruning
-  // evaluates as a FILTER over the snapshot DataFrame — the zone-map
-  // intersection test and the Bloom probe run in the cluster, and only
-  // the CANDIDATE file paths are ever collected to the driver. Legacy
-  // all-JSON chains keep the driver-map path below.
+  // Every pruning entry point evaluates on the driver over the
+  // version's resolved snapshot ([[snapshot]]): live files plus their
+  // zone maps and Bloom entries. A checkpoint-backed version costs no
+  // Spark job once its checkpoint is cached.
 
-  private def dfZoneKeep(c: String, tag: Char, loC: Option[String],
-                         hiC: Option[String]): org.apache.spark.sql.Column = {
-    val st = element_at(col("stats"), c)
-    def typed(x: org.apache.spark.sql.Column) = tag match {
-      case 'd' => x.cast("double")
-      case 's' => x // Spark string compare = unsigned UTF-8 bytes, same as cmpCanon
-      case _ => x.cast("long") // l, b, D, t canonicals are integral strings
-    }
-    def litOfCanon(s: String) = tag match {
-      case 'd' => lit(s.toDouble)
-      case 's' => lit(s)
-      case _ => lit(s.toLong)
-    }
-    val mn = st.getField("mn")
-    val mx = st.getField("mx")
-    val intersects = Seq(
-      hiC.map(h => typed(mn) <= litOfCanon(h)),
-      loC.map(l => typed(mx) >= litOfCanon(l))).flatten
-      .reduceOption(_ && _).getOrElse(lit(true))
-    st.isNull || (mn.isNotNull && mx.isNotNull && intersects)
-  }
-
-  private def dfCandidatesRange(c: String, lo: Option[Any], hi: Option[Any],
-                                v: Long): Seq[String] = {
-    val tag = tagOf(c)
-    GraftTable.snapshotPruneJobs.incrementAndGet()
-    snapshotDF(v)
-      .filter(dfZoneKeep(c, tag, lo.map(canonValue(_, tag)),
-        hi.map(canonValue(_, tag))))
-      .select("file").collect().map(_.getString(0)).toSeq.sorted
-  }
-
-  /** Equality pruning on the snapshot frame, for ONE OR MANY values in
-    * a SINGLE Spark job (an `IN (k values)` statement costs one
-    * planning pass, not k): a file survives when ANY value intersects
-    * its zone map AND passes its Bloom probe. Probes use each ENTRY'S
-    * OWN geometry (bits = 64·size(words), probe count = the entry's
-    * stored k — exactly the driver path's `posFor(be.k, …)`, so the
-    * two pruning paths can never diverge if BloomK changes); files
-    * without a bloom pass. `shiftleft` must be the SQL form: the
-    * Column-API variant only takes literal shifts.
+  /** The file's zone map for `c` admits `hit(min, max)`: a file without
+    * one survives; a file whose `c` is all-null never does (no range or
+    * equality predicate matches a null).
     */
-  private def dfCandidatesEqualsAny(c: String, xs: Seq[Any], v: Long): Seq[String] = {
-    val tag = tagOf(c)
-    val canons = xs.map(canonValue(_, tag)).distinct
-    // stage every canon as a column first (SQL lambdas can reference
-    // columns by name — never string-embed a user value)
-    var df = snapshotDF(v).withColumn("__bw", element_at(col("blooms"), c))
-    canons.zipWithIndex.foreach { case (canon, i) =>
-      df = df.withColumn(s"__c$i", lit(canon))
+  private def zoneMay(s: GraftTable.Snapshot, file: String, c: String)
+                     (hit: (String, String) => Boolean): Boolean =
+    s.stats.get(file).flatMap(_.cols.get(c)) match {
+      case None => true
+      case Some(ColStats(_, _, Some(mn), Some(mx))) => hit(mn, mx)
+      case _ => false
     }
-    val conds = canons.indices.map { i =>
-      val canon = canons(i)
-      // per-entry geometry: probe positions j ∈ [0, __bw.k) via the
-      // same md5("j:canon") first-8-hex-chars hash as the driver path,
-      // modulo THIS entry's bit width
-      val pos = s"CAST(conv(substring(md5(concat(cast(j AS STRING), ':', " +
-        s"__c$i)), 1, 8), 16, 10) AS BIGINT) % " +
-        "(CAST(size(__bw.words) AS BIGINT) * 64)"
-      // k <= 0 never occurs in written entries, but sequence(0, -1)
-      // would walk backwards — guard to degrade to unprunable instead
-      val probeOk = expr(
-        s"__bw.k <= 0 OR forall(sequence(0, __bw.k - 1), j -> " +
-          s"(element_at(__bw.words, CAST(($pos) DIV 64 AS INT) + 1) & " +
-          s"shiftleft(CAST(1 AS BIGINT), CAST(($pos) % 64 AS INT))) != 0)")
-      dfZoneKeep(c, tagOf(c), Some(canon), Some(canon)) &&
-        (col("__bw").isNull || probeOk)
-    }
-    GraftTable.snapshotPruneJobs.incrementAndGet()
-    df.filter(conds.reduce(_ || _))
-      .select("file").collect().map(_.getString(0)).toSeq.sorted
-  }
 
-  private def dfCandidatesEquals(c: String, x: Any, v: Long): Seq[String] =
-    dfCandidatesEqualsAny(c, Seq(x), v)
-
-  private def candidateFilesAt(c: String, lo: Any, hi: Any, v: Long): Seq[String] = {
-    if (hasCkptBase(v)) return dfCandidatesRange(c, Some(lo), Some(hi), v)
-    val files = manifestFiles(v)
-    val tag = tagOf(c)
-    val (loC, hiC) = (canonValue(lo, tag), canonValue(hi, tag))
-    val stats = replayStats(v)
-    files.filter { fl =>
-      stats.get(fl).flatMap(_.cols.get(c)) match {
-        case None => true
-        case Some(cs) => (cs.min, cs.max) match {
-          case (Some(mn), Some(mx)) =>
-            cmpCanon(tag, mx, loC) >= 0 && cmpCanon(tag, mn, hiC) <= 0
-          case _ => false // no non-null value in the file
-        }
+  /** Live files at `v` that MAY hold `c` equal to one of `canons`
+    * (canonical values): some value lies inside the file's zone map AND
+    * passes its Bloom probe. A value's k positions are the first 8 hex
+    * digits of md5("i:<canonical value>") modulo the bit width — the
+    * hash the commit built the filter with. Each entry is probed with
+    * its OWN persisted geometry (k and 64 × word count), never this
+    * instance's `bloomBits`, so a table reopened with different
+    * parameters probes every filter exactly as it was built. Files
+    * without a Bloom entry degrade to the zone-map verdict.
+    */
+  private def equalsCandidates(c: String, tag: Char, canons: Seq[String],
+                               v: Long): Seq[String] = {
+    val s = snapshot(v)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val posCache = scala.collection.mutable.Map.empty[(String, Int, Int), Seq[Int]]
+    def posFor(x: String, k: Int, bits: Int): Seq[Int] =
+      posCache.getOrElseUpdate((x, k, bits), (0 until k).map { i =>
+        val h = md.digest(s"$i:$x".getBytes("UTF-8"))
+          .take(4).map("%02x".format(_)).mkString
+        (java.lang.Long.parseLong(h, 16) % bits).toInt
+      })
+    s.files.filter { fl =>
+      val bloom = s.blooms.get((fl, c))
+      canons.exists { x =>
+        zoneMay(s, fl, c)((mn, mx) =>
+          cmpCanon(tag, mn, x) <= 0 && cmpCanon(tag, mx, x) >= 0) &&
+          bloom.forall(be => posFor(x, be.k, be.words.length * 64)
+            .forall(p => (be.words(p / 64) & (1L << (p % 64))) != 0L))
       }
     }
   }
@@ -1376,16 +1286,15 @@ final class GraftTable(spark: SparkSession, val path: String,
     val pc = physicalName(c) // stats are keyed physical, the frame is logical
     val tag = tagOf(pc)
     val v = currentVersion // one snapshot for both file list and vectors
-    readResolved(candidateFilesAt(pc, lo, hi, v), v)
+    readResolved(candidateFilesRangeAt(pc, Some(lo), Some(hi), v), v)
       .filter(col(c) >= litOf(lo, tag) && col(c) <= litOf(hi, tag))
   }
 
   /** Live files that MAY hold a row with `c` = `x`: zone-map range
     * pruning (when `c` is in `statsCols`) PLUS the per-file BLOOM test
-    * (when `c` is in `bloomCols`) — the value's k md5 positions are
-    * recomputed driver-side from the same canonical rendering the
-    * commit hashed, and a file whose bitmap misses ANY bit cannot hold
-    * the value. Files without a bloom degrade to the zone-map verdict.
+    * (when `c` is in `bloomCols`) — a file whose bitmap misses ANY of
+    * the value's bits cannot hold it. Files without a bloom degrade to
+    * the zone-map verdict.
     */
   def candidateFilesEquals(c: String, x: Any): Seq[String] = {
     val v = currentVersion
@@ -1393,34 +1302,8 @@ final class GraftTable(spark: SparkSession, val path: String,
   }
 
   private def candidateFilesEqualsAt(c: String, x: Any, v: Long): Seq[String] = {
-    if (hasCkptBase(v)) return dfCandidatesEquals(c, x, v)
     val tag = tagOf(c)
-    val canon = canonValue(x, tag)
-    val ranged = candidateFilesAt(c, x, x, v)
-    val blooms = replayBlooms(v)
-    if (blooms.isEmpty) return ranged
-    val md = java.security.MessageDigest.getInstance("MD5")
-    // positions are computed per ENTRY geometry (its own modulus and
-    // hash count — persisted with the entry), NOT this instance's
-    // bloomBits: a table reopened with different parameters must probe
-    // each filter exactly as it was built. Memoized per distinct
-    // geometry (one md5 round per (k, bits) pair).
-    val posCache = scala.collection.mutable.Map.empty[(Int, Int), Seq[Int]]
-    def posFor(k: Int, bits: Int): Seq[Int] =
-      posCache.getOrElseUpdate((k, bits), (0 until k).map { i =>
-        val h = md.digest(s"$i:$canon".getBytes("UTF-8"))
-          .take(4).map("%02x".format(_)).mkString
-        (java.lang.Long.parseLong(h, 16) % bits).toInt
-      })
-    ranged.filter { fl =>
-      blooms.get((fl, c)) match {
-        case None => true // no bloom recorded — unprunable
-        case Some(be) =>
-          val ws = be.words
-          posFor(be.k, ws.length * 64)
-            .forall(p => (ws(p / 64) & (1L << (p % 64))) != 0L)
-      }
-    }
+    equalsCandidates(c, tag, Seq(canonValue(x, tag)), v)
   }
 
   /** BLOOM-PRUNED POINT LOOKUP: rows with `c` = `x`, reading only files
@@ -1475,27 +1358,17 @@ final class GraftTable(spark: SparkSession, val path: String,
     * safe).
     */
   def candidateFilesRangeAt(c: String, lo: Option[Any], hi: Option[Any],
-                            v: Long): Seq[String] = {
-    if (lo.isEmpty && hi.isEmpty) return manifestFiles(v)
-    if (scala.util.Try(tagOf(c)).isFailure) return manifestFiles(v)
-    if (hasCkptBase(v)) return dfCandidatesRange(c, lo, hi, v)
-    val files = manifestFiles(v)
-    val tag = tagOf(c)
-    val loC = lo.map(canonValue(_, tag))
-    val hiC = hi.map(canonValue(_, tag))
-    val stats = replayStats(v)
-    files.filter { fl =>
-      stats.get(fl).flatMap(_.cols.get(c)) match {
-        case None => true
-        case Some(cs) => (cs.min, cs.max) match {
-          case (Some(mn), Some(mx)) =>
-            hiC.forall(h => cmpCanon(tag, mn, h) <= 0) &&
-              loC.forall(l => cmpCanon(tag, mx, l) >= 0)
-          case _ => false // no non-null value — no range predicate matches
-        }
-      }
+                            v: Long): Seq[String] =
+    scala.util.Try(tagOf(c)).toOption match {
+      case Some(tag) if lo.nonEmpty || hi.nonEmpty =>
+        val loC = lo.map(canonValue(_, tag))
+        val hiC = hi.map(canonValue(_, tag))
+        val s = snapshot(v)
+        s.files.filter(fl => zoneMay(s, fl, c)((mn, mx) =>
+          hiC.forall(h => cmpCanon(tag, mn, h) <= 0) &&
+            loC.forall(l => cmpCanon(tag, mx, l) >= 0)))
+      case _ => manifestFiles(v)
     }
-  }
 
   /** Files at `v` that MAY hold a row with `c` = `x` (zone map + Bloom;
     * conservative like [[candidateFilesRangeAt]]). Public form of the
@@ -1506,77 +1379,46 @@ final class GraftTable(spark: SparkSession, val path: String,
       .getOrElse(manifestFiles(v))
 
   /** Files that MAY hold `c` = any of `xs` — the `IN (…)` pruning
-    * entry point ([[org.apache.spark.sql.graft.GraftPrunedFileIndex]]).
-    * At checkpoint-backed versions the whole value list evaluates in
-    * ONE snapshot-frame job ([[dfCandidatesEqualsAny]]); the driver
-    * path unions the per-value probes over the already-materialized
-    * stats/bloom replay (no jobs either way). Unprunable → all files.
+    * entry point ([[org.apache.spark.sql.graft.GraftPrunedFileIndex]]):
+    * the whole value list probes one resolved snapshot. Unprunable →
+    * all files.
     */
   def candidateFilesEqualsAnyVersioned(c: String, xs: Seq[Any], v: Long): Seq[String] =
     scala.util.Try {
       if (xs.isEmpty) Seq.empty[String]
-      else if (hasCkptBase(v)) dfCandidatesEqualsAny(c, xs, v)
-      else xs.flatMap(x => candidateFilesEqualsAt(c, x, v)).distinct.sorted
+      else {
+        val tag = tagOf(c)
+        equalsCandidates(c, tag, xs.map(canonValue(_, tag)).distinct, v).sorted
+      }
     }.getOrElse(manifestFiles(v))
 
   /** Files at `v` that MAY hold `c` = any of `xs`, pruned by ZONE MAPS
     * ONLY in one pass over the SORTED value set — the large-IN-list
     * form ([[PredicatePruning.BloomProbeMaxValues]]): per-value Bloom
-    * probes would balloon the planning expression (checkpoint path) or
-    * cost k md5 rounds (driver path), while "does any value land in
-    * [min, max]" is one binary search per file against one sorted
-    * array, at any list size. Superset of the Bloom-probed result —
-    * conservative, the residual IN still runs. Unprunable → all files.
+    * probes would cost k md5 rounds per value, while "does any value
+    * land in [min, max]" is one binary search per file against one
+    * sorted array, at any list size. Superset of the Bloom-probed
+    * result — conservative, the residual IN still runs. Unprunable →
+    * all files.
     */
   def candidateFilesInSortedVersioned(c: String, xs: Seq[Any], v: Long): Seq[String] =
     scala.util.Try {
       if (xs.isEmpty) Seq.empty[String]
       else {
         val tag = tagOf(c)
-        val canons = xs.map(canonValue(_, tag)).distinct
-        if (hasCkptBase(v)) {
-          // ONE snapshot-frame job: a single sorted-array literal and a
-          // higher-order `exists` per file — expression size O(1) in k
-          GraftTable.snapshotPruneJobs.incrementAndGet()
-          val valsCol = tag match {
-            case 'd' => lit(canons.map(_.toDouble).sorted.toArray)
-            case 's' => lit(canons.sorted.toArray)
-            case _ => lit(canons.map(_.toLong).sorted.toArray)
+        val sorted = xs.map(canonValue(_, tag)).distinct
+          .sortWith(cmpCanon(tag, _, _) < 0).toIndexedSeq
+        val s = snapshot(v)
+        s.files.filter(fl => zoneMay(s, fl, c) { (mn, mx) =>
+          // smallest value >= mn; a hit iff it is also <= mx
+          var lo = 0
+          var hi = sorted.length
+          while (lo < hi) {
+            val m = (lo + hi) >>> 1
+            if (cmpCanon(tag, sorted(m), mn) < 0) lo = m + 1 else hi = m
           }
-          val st = element_at(col("stats"), c)
-          def typed(x: org.apache.spark.sql.Column) = tag match {
-            case 'd' => x.cast("double")
-            case 's' => x
-            case _ => x.cast("long")
-          }
-          val mn = st.getField("mn")
-          val mx = st.getField("mx")
-          val keep = st.isNull || (mn.isNotNull && mx.isNotNull &&
-            org.apache.spark.sql.functions.exists(valsCol,
-              x => x >= typed(mn) && x <= typed(mx)))
-          snapshotDF(v).filter(keep)
-            .select("file").collect().map(_.getString(0)).toSeq.sorted
-        } else {
-          val sorted = canons.sortWith(cmpCanon(tag, _, _) < 0).toIndexedSeq
-          val stats = replayStats(v)
-          manifestFiles(v).filter { fl =>
-            stats.get(fl).flatMap(_.cols.get(c)) match {
-              case None => true
-              case Some(cs) => (cs.min, cs.max) match {
-                case (Some(mn), Some(mx)) =>
-                  // smallest value >= mn; a hit iff it is also <= mx
-                  var lo = 0
-                  var hi = sorted.length
-                  while (lo < hi) {
-                    val m = (lo + hi) >>> 1
-                    if (cmpCanon(tag, sorted(m), mn) < 0) lo = m + 1 else hi = m
-                  }
-                  lo < sorted.length && cmpCanon(tag, sorted(lo), mx) <= 0
-                case _ => false // no non-null value in the file
-              }
-            }
-          }
-        }
+          lo < sorted.length && cmpCanon(tag, sorted(lo), mx) <= 0
+        })
       }
     }.getOrElse(manifestFiles(v))
 
@@ -1600,16 +1442,16 @@ final class GraftTable(spark: SparkSession, val path: String,
     *
     * Values: counts as Long; MIN/MAX as canonical primitives (long for
     * integral, Boolean, Int epoch days for dates, Long micros for
-    * timestamps; null = column all-null at `v`). At a checkpoint-backed
-    * version the whole spec list evaluates in ONE distributed job over
-    * the snapshot frame; legacy JSON chains use the driver stats map.
-    * Cost is metadata-scale either way — at 100 TB this answers
-    * `count(*)` without touching a single data page.
+    * timestamps; null = column all-null at `v`). `restrictTo` keeps a
+    * partition-filtered file subset (the WHERE-on-partition-column
+    * aggregate). Evaluated on the driver over the resolved snapshot —
+    * at 100 TB this answers `count(*)` without touching a single data
+    * page.
     */
   def metadataAggregates(v: Long, specs: Seq[GraftTable.MetaAgg],
                          restrictTo: Option[Set[String]] = None):
       Option[Seq[Any]] = scala.util.Try {
-    import GraftTable.{MetaAgg, MetaCountCol, MetaCountStar, MetaMax, MetaMin}
+    import GraftTable.{MetaCountCol, MetaCountStar, MetaMax, MetaMin}
     if (specs.isEmpty) return None
     // physical stats keys per referenced logical column; tag gates
     val cols: Seq[String] = specs.collect {
@@ -1633,83 +1475,31 @@ final class GraftTable(spark: SparkSession, val path: String,
       case 'D' => canon.trim.toInt
       case _ => java.lang.Long.valueOf(canon.trim.toLong) // l, t
     }
-    if (hasCkptBase(v)) {
-      // ONE distributed job over the snapshot frame: total rows,
-      // unknown-row files, and per-column missing/nulls/min/max
-      // (optionally restricted to a partition-filtered file subset —
-      // the WHERE-on-partition-column aggregate)
-      def typed(x: org.apache.spark.sql.Column, tag: Char) = tag match {
-        case 'b' => x.cast("long")
-        case 'd' => x.cast("double")
-        case 's' => x
-        case _ => x.cast("long")
-      }
-      val aggs = Seq(
-        coalesce(sum(when(col("rows").geq(lit(0L)), col("rows"))), lit(0L)),
-        coalesce(sum(when(col("rows").lt(lit(0L)), lit(1L)).otherwise(lit(0L))),
-          lit(0L))) ++
-        cols.flatMap { c =>
-          val st = element_at(col("stats"), lit(phys(c)))
-          Seq(
-            coalesce(sum(when(st.isNull, lit(1L)).otherwise(lit(0L))), lit(0L)),
-            coalesce(sum(st.getField("nulls")), lit(0L)),
-            min(typed(st.getField("mn"), tags(c))).cast("string"),
-            max(typed(st.getField("mx"), tags(c))).cast("string"))
-        }
-      GraftTable.snapshotPruneJobs.incrementAndGet()
-      val snap0 = snapshotDF(v)
-      val snap = restrictTo match {
-        case None => snap0
-        case Some(keep) =>
-          val keepDf = spark.createDataset(keep.toSeq)(
-            org.apache.spark.sql.Encoders.STRING).toDF("__keep")
-          snap0.join(keepDf, snap0("file") === col("__keep"), "left_semi")
-      }
-      val r = snap.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val totalRows = r.getLong(0)
-      if (r.getLong(1) > 0) return None // a file without a row count
-      val perCol = cols.zipWithIndex.map { case (c, i) =>
-        val o = 2 + i * 4
-        c -> (r.getLong(o), r.getLong(o + 1),
-          Option(r.getString(o + 2)), Option(r.getString(o + 3)))
-      }.toMap
-      if (perCol.values.exists(_._1 > 0)) return None // stats-less file
-      Some(specs.map {
-        case MetaCountStar => java.lang.Long.valueOf(totalRows)
-        case MetaCountCol(c) => java.lang.Long.valueOf(totalRows - perCol(c)._2)
-        case MetaMin(c) => perCol(c)._3.map(canonOut(_, tags(c))).orNull
-        case MetaMax(c) => perCol(c)._4.map(canonOut(_, tags(c))).orNull
-      })
-    } else {
-      val files = restrictTo match {
-        case None => manifestFiles(v)
-        case Some(keep) => manifestFiles(v).filter(keep)
-      }
-      val stats = replayStats(v)
-      if (!files.forall(stats.contains)) return None
-      val fss = files.map(stats)
-      def colStatsAll(c: String): Option[Seq[ColStats]] = {
-        val cs = fss.map(_.cols.get(phys(c)))
-        if (cs.exists(_.isEmpty)) None else Some(cs.flatten)
-      }
-      val perCol = cols.map(c => c -> colStatsAll(c)).toMap
-      if (cols.exists(c => perCol(c).isEmpty)) return None
-      Some(specs.map {
-        case MetaCountStar => java.lang.Long.valueOf(fss.map(_.rows).sum)
-        case MetaCountCol(c) => java.lang.Long.valueOf(
-          fss.map(_.rows).sum - perCol(c).get.map(_.nulls).sum)
-        case MetaMin(c) =>
-          val t = tags(c)
-          perCol(c).get.flatMap(_.min)
-            .reduceOption((a, b) => if (cmpCanon(t, a, b) <= 0) a else b)
-            .map(canonOut(_, t)).orNull
-        case MetaMax(c) =>
-          val t = tags(c)
-          perCol(c).get.flatMap(_.max)
-            .reduceOption((a, b) => if (cmpCanon(t, a, b) >= 0) a else b)
-            .map(canonOut(_, t)).orNull
-      })
+    val s = snapshot(v)
+    val files = restrictTo.fold(s.files)(keep => s.files.filter(keep))
+    if (!files.forall(s.stats.contains)) return None
+    val fss = files.map(s.stats)
+    def colStatsAll(c: String): Option[Seq[ColStats]] = {
+      val cs = fss.map(_.cols.get(phys(c)))
+      if (cs.exists(_.isEmpty)) None else Some(cs.flatten)
     }
+    val perCol = cols.map(c => c -> colStatsAll(c)).toMap
+    if (cols.exists(c => perCol(c).isEmpty)) return None
+    Some(specs.map {
+      case MetaCountStar => java.lang.Long.valueOf(fss.map(_.rows).sum)
+      case MetaCountCol(c) => java.lang.Long.valueOf(
+        fss.map(_.rows).sum - perCol(c).get.map(_.nulls).sum)
+      case MetaMin(c) =>
+        val t = tags(c)
+        perCol(c).get.flatMap(_.min)
+          .reduceOption((a, b) => if (cmpCanon(t, a, b) <= 0) a else b)
+          .map(canonOut(_, t)).orNull
+      case MetaMax(c) =>
+        val t = tags(c)
+        perCol(c).get.flatMap(_.max)
+          .reduceOption((a, b) => if (cmpCanon(t, a, b) >= 0) a else b)
+          .map(canonOut(_, t)).orNull
+    })
   }.toOption.flatten
 
   /** Diagnostic: how many FULL data-tree walks this instance has done.
@@ -2567,7 +2357,7 @@ final class GraftTable(spark: SparkSession, val path: String,
           java.nio.file.Files.move(stage, dvRoot.resolve(f"v$kMin%06d_$nonce"))
           Some(s"#dv:$nonce")
         }
-      // re-anchor as a PARQUET CHECKPOINT: snapshotDF resolves kMin
+      // re-anchor as a PARQUET CHECKPOINT: snapshot resolves kMin
       // THROUGH the soon-dropped chain (stats and blooms included as
       // columns), so neither dropped manifests nor dropped stats files
       // are ever needed again. A kMin that is already a checkpoint only
@@ -2585,9 +2375,7 @@ final class GraftTable(spark: SparkSession, val path: String,
           if (alreadyCkpt) kEntries.find(_.startsWith("#ckpt:")).get
           else {
             val nonce = java.util.UUID.randomUUID().toString.take(8)
-            java.nio.file.Files.createDirectories(ckptRoot)
-            snapshotDF(kMin).write.mode(SaveMode.Overwrite)
-              .parquet(ckptDirFor(kMin, nonce).toString)
+            writeCkpt(kMin, nonce, ckptRows(snapshot(kMin)))
             s"#ckpt:$nonce"
           }
         val full = (own ++ txns ++ mergedMarker.toSeq :+ ckptMarker).sorted

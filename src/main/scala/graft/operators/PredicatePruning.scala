@@ -31,11 +31,12 @@ object PredicatePruning {
   val lastMutationCandidateFiles = new AtomicLong(-1)
 
   /** IN/InSet lists up to this size probe per-value through the Bloom
-    * tier ([[GraftTable.candidateFilesEqualsAnyVersioned]], one job);
-    * LARGER lists prune in one sorted zone-map pass with no per-value
-    * Bloom probes ([[GraftTable.candidateFilesInSortedVersioned]]) —
-    * still one job, expression size O(1), a documented superset (Bloom
-    * would only prune further).
+    * tier ([[GraftTable.candidateFilesEqualsAnyVersioned]]); LARGER
+    * lists prune in one sorted zone-map pass with no per-value Bloom
+    * probes ([[GraftTable.candidateFilesInSortedVersioned]]) — one
+    * binary search per file, a documented superset (Bloom would only
+    * prune further). Both evaluate on the driver over the version's
+    * resolved snapshot.
     */
   val BloomProbeMaxValues = 256
 

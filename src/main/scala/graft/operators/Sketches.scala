@@ -237,8 +237,11 @@ object Sketches {
     * ANALYZE-per-partition shape: per-day / per-language quantiles at
     * corpus scale). State ≤ |groups|·O(k·L) rows; each group compresses
     * at its own threshold max(n_g div k, 1) in its own fold, and nothing
-    * is collected to the driver. The group column travels as `grp`; rows
-    * whose group is null yield no state.
+    * is collected to the driver. The group column travels as `grp`.
+    * Rows whose group key is null yield NO state (unlike a plain
+    * `groupBy`, which keeps a null group): they get no sketch and no
+    * quantile. The q202 oracle drops them the same way (its threshold
+    * join never matches a null group).
     */
   def qdigestStateBy(df: DataFrame, grpCol: String, valCol: String,
                      lo: Double, hi: Double, k: Int): DataFrame = {
@@ -262,7 +265,10 @@ object Sketches {
       .drop("grp")
   }
 
-  /** Merge per-group q-digest states (group+node-wise sum + recompress). */
+  /** Merge per-group q-digest states (group+node-wise sum + recompress).
+    * State rows whose `grp` is null yield no merged state, as in
+    * [[qdigestStateBy]].
+    */
   def qdigestMergeBy(states: Seq[DataFrame], k: Int): DataFrame = {
     require(states.nonEmpty, "qdigestMergeBy needs at least one state")
     qdigestCompress(states.reduce(_ unionByName _), k)

@@ -1387,16 +1387,16 @@ final class GraftPrunedFileIndex(spark: SparkSession, gt: GraftTable,
     * The translation ladder is SHARED with the mutation planners
     * ([[graft.operators.PredicatePruning]]): equality/range/IN through
     * the zone-map+Bloom tiers — IN/InSet lists up to
-    * `BloomProbeMaxValues` Bloom-probe in ONE job, larger lists prune
-    * in one sorted zone-map pass (no cap, expression size O(1)).
+    * `BloomProbeMaxValues` Bloom-probe per value, larger lists prune
+    * in one sorted zone-map pass (no cap).
     */
   private def candidates(e: Expression): Option[Set[String]] =
     graft.operators.PredicatePruning.candidates(gt, e, version)
 
   // one scan's planning asks listFiles more than once (statistics,
   // then partitions) — memoize the candidate sets per canonicalized
-  // filter set so each distinct predicate costs at most one pruning
-  // job per scan
+  // filter set so each distinct predicate resolves the snapshot and
+  // probes its files once per scan
   private val candidateCache =
     scala.collection.mutable.Map.empty[Seq[Expression], Seq[Set[String]]]
 

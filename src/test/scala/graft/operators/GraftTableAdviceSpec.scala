@@ -370,19 +370,66 @@ class GraftTableAdviceSpec extends SparkSpec {
     // a second writer under DIFFERENT bits: its entries carry mod-256
     mk(256).upsertReplace(rows(("d2", "p", "r3", 3)))
     // enough commits to roll a parquet checkpoint (CheckpointEvery=8),
-    // so equality pruning takes the snapshot-frame (DF) path
+    // so the Bloom entries are read back from checkpoint columns
     for (i <- 0 until 8)
       mk(512).upsertReplace(rows((s"e$i", "p", s"x$i", 100 + i)))
-    // reopened with yet another modulus: the DF probe must use each
+    // reopened with yet another modulus: the probe must use each
     // entry's stored k/bits, never the instance's
     val t = mk(4096)
     assert(t.readWhereEquals("rk", "r3").select("n").as[Int].collect().toSet
-      == Set(3), "DF-path bloom probe false-pruned or mis-probed")
+      == Set(3), "checkpoint-backed bloom probe false-pruned or mis-probed")
     assert(t.candidateFilesEquals("rk", "r3").size < t.dataFileCount,
-      "DF-path bloom probe stopped pruning")
+      "checkpoint-backed bloom probe stopped pruning")
     // value present in the FIRST writer's mod-1024 entries
     assert(t.readWhereEquals("rk", "r1").select("n").as[Int].collect().toSet
       == Set(1))
+  }
+
+  test("one version answers identically from its JSON base and from the " +
+    "parquet checkpoint vacuum re-anchors it on") {
+    val p = dir()
+    val mk = (bits: Int) => new GraftTable(spark, p, keys = Seq("pk", "rk"),
+      partitionCol = "day", statsCols = Seq("n"), bloomCols = Seq("rk"),
+      bloomBits = bits)
+    def nrows(t: (String, String, String, Option[Int])*) =
+      t.toSeq.toDF("day", "pk", "rk", "n")
+    mk(1024).createIfNotExists(nrows().schema)
+    mk(1024).importOnce(nrows(("d1", "p", "r1", Some(1)), ("d1", "p", "r2", Some(3)),
+      ("d2", "p", "r3", Some(10)), ("d2", "p", "r4", Some(12))))
+    // mixed Bloom geometries, a null partition, and an all-null file (d3)
+    mk(256).upsertReplace(nrows((null, "p", "r5", Some(20)),
+      ("d3", "p", "r6", None)))
+    mk(512).upsertReplace(nrows(("d4", "p", "r7", Some(30)), ("d4", "p", "r8", Some(31))))
+    val t = mk(4096)
+    val v = t.currentVersion
+    def manifest = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(p, "_graft_log", f"v$v%06d.json"))
+    def answers = Seq(
+      t.candidateFilesRangeAt("n", Some(10), None, v).sorted,
+      t.candidateFilesRangeAt("n", None, Some(3), v).sorted,
+      t.candidateFilesRangeAt("n", Some(2), Some(11), v).sorted,
+      t.candidateFilesRangeAt("n", Some(100), Some(200), v).sorted,
+      t.candidateFilesEqualsVersioned("rk", "r5", v).sorted,
+      t.candidateFilesEqualsVersioned("n", 12, v).sorted,
+      t.candidateFilesEqualsAnyVersioned("rk", Seq("r1", "r6", "zz"), v),
+      t.candidateFilesInSortedVersioned("n", Seq(3, 30, 1000), v).sorted,
+      t.metadataAggregates(v, Seq(GraftTable.MetaCountStar,
+        GraftTable.MetaCountCol("n"), GraftTable.MetaMin("n"),
+        GraftTable.MetaMax("n"))))
+    assert(v < GraftTable.CheckpointEvery && !manifest.contains("#ckpt:"))
+    val fromJson = answers
+    val live = t.liveFilesAt(v).size
+    assert(live == 5, s"expected one file per partition, got $live")
+    // the answers prune (a vacuous all-files answer would prove nothing)
+    assert(fromJson.take(8).forall {
+      case fs: Seq[_] => fs.size < live
+      case _ => false
+    }, s"$fromJson")
+    assert(fromJson(3) == Seq.empty)
+    assert(fromJson(8) == Some(Seq(8L, 7L, 1L, 31L)))
+    t.vacuum(keepVersions = 1)
+    assert(manifest.contains("#ckpt:"), "vacuum must re-anchor v as a checkpoint")
+    assert(answers == fromJson)
   }
 
   test("micros write clone re-applies value-shaping caller conf " +

@@ -2,9 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 
 /** Job budget of the keyed mutations on a small table: each count is a
@@ -13,17 +10,6 @@ import graft.SparkSpec
   */
 class MutationJobBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; ListenerDrain(spark.sparkContext); jobs.get() }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private def rows(t: (String, String, String, Int)*) =
     t.toSeq.toDF("day", "pk", "rk", "n")

@@ -95,21 +95,27 @@ class PredicatePruningSpec extends SparkSpec {
     assert(exact.toSet.subsetOf(cand.toSet))
   }
 
-  test("SQL IN with 1000 values (InSet far above the old 256 cap) " +
-    "prunes in ONE snapshot job at a checkpoint-backed version") {
+  test("SQL IN with 1000 values prunes with no Spark job") {
     val t = seeded()
     GraftTableMeta.annotate(t)
-    // roll past a checkpoint so pruning takes the snapshot-frame path
+    // roll past a checkpoint: the version's chain bottoms on parquet
     for (i <- 0 until 8)
       t.upsertReplace(Seq((s"e$i", "p", s"x$i", 1000L + i))
         .toDF("day", "pk", "rk", "n"))
+    val v = t.currentVersion
+    assert(v >= GraftTable.CheckpointEvery && v < 2 * GraftTable.CheckpointEvery)
+    val vals: Seq[Any] = (0L until 997L).map(10000L + _) ++ Seq(5L, 105L, 205L)
+    val live = t.liveFilesAt(v) // the checkpoint is cached from here on
+    var cand = Seq.empty[String]
+    val jobs = jobsOf { cand = t.candidateFilesInSortedVersioned("n", vals, v) }
+    assert(jobs == 0, s"IN (1000 values) pruning ran $jobs Spark jobs, expected 0")
+    assert(cand.nonEmpty && cand.size < live.size,
+      s"sorted-pass pruning failed: ${cand.size} of ${live.size}")
     val cat = s"gcat_pp_${System.nanoTime()}"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.root",
       java.nio.file.Paths.get(t.path).getParent.getParent.toString)
-    val inList = ((0L until 997L).map(10000L + _) ++ Seq(5L, 105L, 205L))
-      .mkString(", ")
-    val before = GraftTable.snapshotPruneJobs.get()
+    val inList = vals.mkString(", ")
     org.apache.spark.sql.graft.GraftSqlRead.lastPlannedFiles.set(-1)
     val ns = java.nio.file.Paths.get(t.path).getParent.getFileName.toString
     val tn = java.nio.file.Paths.get(t.path).getFileName.toString
@@ -117,8 +123,6 @@ class PredicatePruningSpec extends SparkSpec {
       s"SELECT rk, n FROM $cat.$ns.$tn WHERE n IN ($inList)")
       .as[(String, Long)].collect().toSet
     assert(got == Set(("r5", 5L), ("r105", 105L), ("r205", 205L)))
-    val jobs = GraftTable.snapshotPruneJobs.get() - before
-    assert(jobs == 1L, s"IN (1000 values) cost $jobs pruning jobs, expected 1")
     import org.apache.spark.sql.graft.GraftSqlRead
     assert(GraftSqlRead.lastPlannedFiles.get() >= 0 &&
       GraftSqlRead.lastPlannedFiles.get() < GraftSqlRead.lastTotalFiles.get(),

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -208,19 +206,12 @@ class QdigestSpec extends SparkSpec {
   }
 
   test("q-digest state plus quantiles stays within its job budget") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
     val df = (0 until 5000).map(i => (i * 7 % 1000).toDouble).toDF("v")
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    val n = try {
+    val n = jobsOf {
       val st = Sketches.qdigestState(df, "v", 0.0, 1000.0, 64)
       Sketches.qdigestQuantile(st, 0.0, 1000.0, qs).collect()
-      ListenerDrain(spark.sparkContext)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(l)
+      ()
+    }
     info(s"qdigestState + qdigestQuantile: $n jobs")
     // a ceiling: the level-by-level formulation ran 25 jobs here
     assert(n <= 6, s"q-digest ran $n Spark jobs, budget 6")

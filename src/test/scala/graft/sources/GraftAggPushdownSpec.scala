@@ -166,4 +166,23 @@ class GraftAggPushdownSpec extends SparkSpec {
     assert(!isMetadataOnly(bare))
     assert(spark.sql(bare).collect()(0).getLong(0) == 1L)
   }
+
+  test("at a checkpoint-backed version count(*)/min/max plans with no " +
+    "Spark job once the checkpoint is cached") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"""CREATE TABLE $cat.db.c (day STRING, pk BIGINT, v BIGINT)
+      PARTITIONED BY (day) TBLPROPERTIES ('keys'='pk', 'statsCols'='v')""")
+    // CREATE is v1; nine INSERTs roll past the v8 parquet checkpoint
+    for (i <- 1 to 9)
+      spark.sql(s"INSERT INTO $cat.db.c (day, pk, v) VALUES ('d${i % 3}', $i, ${i * 10})")
+    val t = graft.operators.GraftTableMeta.open(spark, s"$root/db/c").get
+    assert(t.currentVersion == 10L)
+    t.liveFilesAt(t.currentVersion) // the checkpoint is cached from here on
+    val q = s"SELECT count(*) AS c, min(v) AS mn, max(v) AS mx FROM $cat.db.c"
+    val jobs = jobsOf { spark.sql(q).queryExecution.executedPlan; () }
+    assert(jobs == 0, s"metadata-only aggregate planning ran $jobs Spark jobs")
+    assert(isMetadataOnly(q))
+    val r = spark.sql(q).collect()(0)
+    assert(r.getLong(0) == 9L && r.getLong(1) == 10L && r.getLong(2) == 90L)
+  }
 }

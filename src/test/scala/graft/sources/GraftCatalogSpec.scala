@@ -483,24 +483,29 @@ class GraftCatalogSpec extends SparkSpec {
       s"un-anchored changes read must equal snapshot-as-inserts: $unanchored")
   }
 
-  test("IN-list pruning at a checkpoint-backed version costs ONE " +
-    "snapshot job for the whole value list; files still prune") {
+  test("IN-list pruning at a checkpoint-backed version runs no Spark job") {
     val (cat, root) = freshCatalog()
     val t = seed(root)
     val rows = (0L until 400L).map(i => (s"d${i % 2}", "p", s"r$i", i))
       .toDF("day", "pk", "rk", "n")
     t.importOnce(rows)
     t.compactRange(8, Seq("n")) // 8 range-disjoint files on n
-    // roll past a checkpoint so equality pruning takes the DF path
+    // roll past a checkpoint: the version's chain bottoms on parquet
     for (i <- 0 until 8)
       t.upsertReplace(Seq((s"e$i", "p", s"x$i", 1000L + i)).toDF("day", "pk", "rk", "n"))
-    val before = GraftTable.snapshotPruneJobs.get()
+    val v = t.currentVersion
+    val live = t.liveFilesAt(v) // the checkpoint is cached from here on
+    var cand = Seq.empty[String]
+    val jobs = jobsOf {
+      cand = t.candidateFilesEqualsAnyVersioned("n", Seq(5L, 105L, 205L), v)
+    }
+    assert(jobs == 0, s"IN (3 values) pruning ran $jobs Spark jobs, expected 0")
+    assert(cand.nonEmpty && cand.size < live.size,
+      s"IN pruning stopped skipping files: ${cand.size} of ${live.size}")
     val got = spark.sql(
       s"SELECT rk, n FROM $cat.db.t WHERE n IN (5, 105, 205)")
       .as[(String, Long)].collect().toSet
     assert(got == Set(("r5", 5L), ("r105", 105L), ("r205", 205L)))
-    val jobs = GraftTable.snapshotPruneJobs.get() - before
-    assert(jobs == 1L, s"IN (3 values) cost $jobs pruning jobs, expected 1")
     assert(GraftSqlRead.lastPlannedFiles.get() < GraftSqlRead.lastTotalFiles.get(),
       s"IN pruning stopped skipping files: planned ${GraftSqlRead.lastPlannedFiles.get()}" +
         s" of ${GraftSqlRead.lastTotalFiles.get()}")
