@@ -103,7 +103,7 @@ object EventQueries {
     QuerySpec("q52_stream_dedup",
       (s, dir) => {
         GraftSession.tune(s)
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         def src = s.readStream.schema(batchSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val doubled = src.unionByName(src)
@@ -125,7 +125,7 @@ object EventQueries {
     QuerySpec("q135_stream_dedup_wm",
       (s, dir) => {
         GraftSession.tune(s)
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         def src() = {
           val raw = s.readStream.schema(batchSchema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -149,7 +149,7 @@ object EventQueries {
     QuerySpec("q27_stream_tumbling",
       (s, dir) => {
         GraftSession.tune(s)
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         // file-stream sources want a directory: stream the sf dir but
         // glob-filter down to the events table
         val raw = s.readStream.schema(batchSchema)
@@ -184,7 +184,7 @@ object EventQueries {
       (s, dir) => {
         GraftSession.tune(s)
         import graft.streaming.Streams
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         val raw = s.readStream.schema(batchSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val withTs =
@@ -226,7 +226,7 @@ object EventQueries {
     QuerySpec("q89_stream_static_join",
       (s, dir) => {
         GraftSession.tune(s)
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         val raw = s.readStream.schema(batchSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val withTs =
@@ -280,7 +280,7 @@ object EventQueries {
             max(when(col("event_type") === "purchase", unix_micros(col("ts")))))
             - lit(8L * HOUR_US)).as("cut"))
           .head().getLong(0)
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         def src() = {
           val raw = s.readStream.schema(batchSchema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -343,7 +343,7 @@ object EventQueries {
             max(when(col("event_type") === "purchase", unix_micros(col("ts")))))
             - lit(8L * HOUR_US)).as("cut"))
           .head().getLong(0)
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         def src() = {
           val raw = s.readStream.schema(batchSchema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -395,7 +395,7 @@ object EventQueries {
     QuerySpec("q127_stream_stream_join",
       (s, dir) => {
         GraftSession.tune(s)
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         def src() = {
           val raw = s.readStream.schema(batchSchema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)

@@ -288,7 +288,7 @@ object IngestQueries {
     QuerySpec("q148_orc_roundtrip",
       (s, dir) => {
         val base = java.nio.file.Files.createTempDirectory("graft_q148_").toString
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Tables.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
             col("l_returnflag"), col("l_shipdate"))
           .write.mode("overwrite").orc(s"$base/li_orc")
@@ -320,7 +320,7 @@ object IngestQueries {
     QuerySpec("q156_jsonl_roundtrip",
       (s, dir) => {
         val base = java.nio.file.Files.createTempDirectory("graft_q156_").toString
-        s.read.parquet(s"$dir/documents.parquet")
+        Tables.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
           .write.mode("overwrite").json(s"$base/docs_jsonl")
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -357,7 +357,7 @@ object IngestQueries {
       (s, dir) => {
         GraftSession.tune(s)
         val base = java.nio.file.Files.createTempDirectory("graft_q149_").toString
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+        val batchSchema = Tables.parquet(s, s"$dir/events.parquet").schema
         val raw = s.readStream.schema(batchSchema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val ev = if (batchSchema("ts").dataType == org.apache.spark.sql.types.LongType)
@@ -410,7 +410,7 @@ object IngestQueries {
     QuerySpec("q163_csv_roundtrip",
       (s, dir) => {
         val base = java.nio.file.Files.createTempDirectory("graft_q163_").toString
-        s.read.parquet(s"$dir/documents.parquet")
+        Tables.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
           .withColumn("gnarly", concat(col("lang"), lit(",\"q\"\n|"), col("source")))
           .write.mode("overwrite")
@@ -456,7 +456,7 @@ object IngestQueries {
       (s, dir) => {
         GraftSession.tune(s)
         val base = java.nio.file.Files.createTempDirectory("graft_q170_").toString
-        val ev0 = s.read.parquet(s"$dir/events.parquet")
+        val ev0 = Tables.parquet(s, s"$dir/events.parquet")
         ev0.repartition(8).write.mode("overwrite").parquet(s"$base/in")
         val schema = s.read.parquet(s"$base/in").schema
         def transformed = {

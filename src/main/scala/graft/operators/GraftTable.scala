@@ -2118,10 +2118,13 @@ final class GraftTable(spark: SparkSession, val path: String,
       .select(col("__dvf").as("file"), col("__dvi").as("ri"))
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val stage = dvRoot.resolve(s".stage_$nonce")
-    matched.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val n = spark.read.schema("file STRING, ri BIGINT")
-      .parquet(stage.toString).count()
-    if (n == 0) { Fs.deleteTree(stage); return this }
+    // the rows are counted as they are written (a retried task may
+    // count twice; only zero versus non-zero matters), so an empty
+    // vector is known without reading the staged directory back
+    val hits = spark.sparkContext.longAccumulator
+    val count = udf { () => hits.add(1); true }.asNondeterministic()
+    matched.filter(count()).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    if (hits.value == 0) { Fs.deleteTree(stage); return this }
     val target = dvRoot.resolve(f"v${base + 1}%06d_$nonce")
     java.nio.file.Files.move(stage, target)
     try commitDelta(base, Nil, Nil, markers = Seq(s"#dv:$nonce"))
@@ -2526,7 +2529,14 @@ final class GraftTable(spark: SparkSession, val path: String,
     // write job only in the rare all-rows-deleted case — and an empty
     // partitioned write already degenerates to the same outcome (no
     // .parquet files land in staging, the walk moves nothing, the
-    // commit records zero added files)
+    // commit records zero added files). A frame the optimizer already
+    // folded to an empty relation (an importOnce whose rows all fall in
+    // live partitions) is known empty without a job: skip the write.
+    df1.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if r.data.isEmpty => return Nil
+      case _ =>
+    }
     // CLUSTERED WRITES (opt-in, the 100 TB small-file lever): without
     // clustering, a partitionBy write emits one file per (task ×
     // partition value) — a 1000-task mutation touching 100 partitions

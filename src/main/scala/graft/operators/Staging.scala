@@ -112,7 +112,8 @@ object Staging {
         val path = s"$dir/${hint}_${java.util.UUID.randomUUID().toString.take(8)}"
         df.write.mode("overwrite").parquet(path)
         registerRoot(dir, spark.sparkContext.hadoopConfiguration)
-        Staged(spark.read.parquet(path), path)
+        // read back with the frame's own schema: no footer-inference job
+        Staged(spark.read.schema(df.schema).parquet(path), path)
       case None =>
         Staged(df.localCheckpoint(true), "")
     }

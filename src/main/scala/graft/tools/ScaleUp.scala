@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{GraftSession, Tables}
 
 /** Dev/round tool: synthesize an N×-scale copy of a testdata sf dir (for
   * constant-factor stress runs above the largest driver-provided SF —
@@ -53,7 +53,7 @@ object ScaleUp {
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Tables.table(spark, src, t)
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")
     def rot(a: String, i: Int): String = { val r = i % a.length; a.drop(r) + a.take(r) }

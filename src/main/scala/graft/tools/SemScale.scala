@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{GraftSession, Tables}
 import graft.operators.SimilaritySearch
 
 /** Dev/round tool: time [[SimilaritySearch.semanticDedup]] with the
@@ -24,7 +24,7 @@ object SemScale {
       .getOrCreate()
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Tables.embeddings(spark, dir)
     // centroids: the c lowest-id vectors (replica 0 of a ScaleUp dir) —
     // same selection rule as q109's fixed 8, scaled
     val cent = e.filter(col("vec_id") < c)

@@ -76,4 +76,11 @@ object Bridge {
       : org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.connector.catalog.CatalogV2Util
       .v2ColumnsToStructType(cols)
+
+  /** Spark's own rule for the file and directory names a file-source
+    * listing skips (`_`/`.` prefixes bar `_metadata`/`_common_metadata`
+    * and `=` partition dirs, `._COPYING_` suffixes).
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** Job budget of the keyed mutations on a small table: each count is a
@@ -39,7 +41,13 @@ class MutationJobBudgetSpec extends SparkSpec {
       "insertIfAbsent" ->
         jobsOf(t.insertIfAbsent(rows(("d5", "p", "r5", 5), ("d1", "p", "r1", 0)))),
       "importOnce, nothing new" ->
-        jobsOf(t.importOnce(rows(("d1", "p", "r1", 0), ("d5", "p", "r7", 7)))))
+        jobsOf(t.importOnce(rows(("d1", "p", "r1", 0), ("d5", "p", "r7", 7)))),
+      "deleteWhere (vector), no match" -> {
+        val v = t.currentVersion
+        val n = jobsOf(t.deleteWhere(col("n") * 2 === 99))
+        assert(t.currentVersion == v, "a DELETE matching nothing commits no version")
+        n
+      })
     info(counts.map { case (k, n) => s"$k: $n" }.mkString("; "))
     // before the rewrite core: 7, 7, 6, 3, 1 and 4 jobs; importOnce ran 3
     // while it scanned the table for its live partitions
@@ -47,7 +55,7 @@ class MutationJobBudgetSpec extends SparkSpec {
       "upsert, rows change" -> 5, "upsert, no row changes" -> 3,
       "deleteByKeys, match" -> 4, "deleteByKeys, no match" -> 2,
       "deleteByKeys, no keys" -> 0, "insertIfAbsent" -> 2,
-      "importOnce, nothing new" -> 1)
+      "importOnce, nothing new" -> 0, "deleteWhere (vector), no match" -> 1)
     counts.foreach { case (k, n) =>
       assert(n <= ceilings(k), s"$k ran $n Spark jobs, budget ${ceilings(k)}")
     }

@@ -16,8 +16,16 @@ class StagingSpec extends SparkSpec {
   test("staging-dir mode: stage materializes parquet, delete releases it") {
     val root = "file:" + Files.createTempDirectory("graft_stage_spec").toString
     withStagingRoot(root) {
-      val st = Staging.stage(spark.range(100).withColumn("x", col("id") * 2), "spec")
+      val df = spark.range(100).withColumn("x", col("id") * 2)
+      val stageJobs = jobsOf(Staging.stage(df, "jobs").delete())
+      val st = Staging.stage(df, "spec")
       assert(st.path.nonEmpty && st.path.startsWith(root))
+      // the read-back carries the staged frame's schema: building it
+      // runs no footer-inference job, so staging costs exactly its write
+      assert(st.df.schema == spark.read.parquet(st.path).schema)
+      val writeJobs = jobsOf(df.write.parquet(
+        Files.createTempDirectory("graft_stage_plain").toString + "/p"))
+      assert(stageJobs == writeJobs, s"stage ran $stageJobs jobs, its write $writeJobs")
       assert(st.df.count() == 100)
       val p = new org.apache.hadoop.fs.Path(st.path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
